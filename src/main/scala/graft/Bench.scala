@@ -95,14 +95,31 @@ object Bench {
       }
     } catch { case _: Throwable => None }
 
-  private[graft] def sec(v: Double): String = {
-    // Locale.ROOT: f"$v%.2f" uses the default locale — a comma-decimal
-    // locale would emit invalid JSON on the one line that must parse
-    val s = String.format(java.util.Locale.ROOT, "%.2f", Double.box(v))
-    // trim trailing zeros ("0.30"->"0.3", "1.00"->"1"): the one line
-    // the driver captures is length-budgeted (see below)
-    if (s.contains('.')) s.reverse.dropWhile(_ == '0').dropWhile(_ == '.').reverse else s
-  }
+  private[graft] def sec(v: Double): String =
+    // JSON has no NaN or Infinity: a non-finite time is reported as null
+    // rather than breaking the line that must parse
+    if (v.isNaN || v.isInfinite) "null"
+    else {
+      // Locale.ROOT: f"$v%.2f" uses the default locale — a comma-decimal
+      // locale would emit invalid JSON on the one line that must parse
+      val s = String.format(java.util.Locale.ROOT, "%.2f", Double.box(v))
+      // trim trailing zeros ("0.30"->"0.3", "1.00"->"1"): the one line
+      // the driver captures is length-budgeted (see below)
+      if (s.contains('.')) s.reverse.dropWhile(_ == '0').dropWhile(_ == '.').reverse else s
+    }
+
+  /** `v` as the body of a JSON string literal: backslash and quote
+    * escaped, control characters as six-character unicode escapes.
+    * Query names and env-supplied knob values both land inside string
+    * literals of the output lines.
+    */
+  private[graft] def jstr(v: String): String =
+    v.flatMap {
+      case '\\'         => "\\\\"
+      case '"'          => "\\\""
+      case c if c < ' ' => f"\\u${c.toInt}%04x"
+      case c            => c.toString
+    }
 
   /** Budget-bounded `"name":sec` entries of the COSTLIEST queries for
     * the final short JSON object (r21 verdict item 1): the driver's
@@ -114,7 +131,7 @@ object Bench {
   private[graft] def topEntriesJson(mins: Seq[(String, Double)], budget: Int): String = {
     val sb = new StringBuilder
     mins.sortBy(-_._2).iterator
-      .map { case (k, v) => "\"" + k + "\":" + sec(v) }
+      .map { case (k, v) => "\"" + jstr(k) + "\":" + sec(v) }
       .takeWhile(e => sb.length + e.length + 1 <= budget)
       .foreach { e => if (sb.nonEmpty) sb.append(','); sb.append(e) }
     sb.toString
@@ -284,22 +301,15 @@ object Bench {
     // Self-identify partial runs in BOTH outputs: a filtered/excluded
     // total must never be mistakable for the full suite (the detail meta
     // previously carried neither knob).
-    // env-supplied knob values are interpolated into JSON string
-    // literals — escape backslash/quote (and strip control chars) so a
-    // hostile-or-fat-fingered value can't yield unparseable output
-    def jstr(v: String): String =
-      v.flatMap {
-        case '\\' => "\\\\"
-        case '"' => "\\\""
-        case c if c < ' ' => ""
-        case c => c.toString
-      }
+    // env-supplied knob values and query names are interpolated into
+    // JSON string literals: jstr escapes them so a hostile or
+    // fat-fingered value can't yield unparseable output
     val filterJson = if (filter.nonEmpty) s""","filter":"${jstr(filter)}"""" else ""
     val excludeJson =
       if (exclude.nonEmpty) s""","exclude":"${jstr(exclude.toSeq.sorted.mkString(","))}"""" else ""
     val detailEntries = results.map { case (k, _, t1, t2) =>
       val r3 = retried.get(k).map(v => s", ${sec(v)}").getOrElse("")
-      s"""  "$k": [${sec(t1)}, ${sec(t2)}$r3]"""
+      s"""  "${jstr(k)}": [${sec(t1)}, ${sec(t2)}$r3]"""
     } :+
       // Harness metadata nested under ONE reserved key so every other
       // top-level entry is a query timing — a naive max-over-values
@@ -309,7 +319,7 @@ object Bench {
       (s"""  "_meta": {"unit": "sec", "passes": 2, "retried": ${retried.size}, "reported": "min",""" +
         s""" "cpus": $cpus, "sf": "$sfDir"$filterJson$excludeJson,""" +
         s""" "flags": ${flagged.size}, "adjudicated": {""" +
-        adjudicated.map { case (q, v) => s""""$q": ${sec(v)}""" }.mkString(", ") + "}}")
+        adjudicated.map { case (q, v) => s""""${jstr(q)}": ${sec(v)}""" }.mkString(", ") + "}}")
     try java.nio.file.Files.writeString(
       detailPath,
       detailEntries.mkString("{\n", ",\n", "\n}"),
@@ -326,9 +336,9 @@ object Bench {
     // at the tail, adjacent to the aggregate + failed + sf keys the
     // window always retains). The session stopped before the
     // adjudication above, so nothing but the sbt epilogue follows.
-    val qs = results.sortBy(_._2).map { case (k, v, _, _) => "\"" + k + "\":" + sec(v) }
+    val qs = results.sortBy(_._2).map { case (k, v, _, _) => "\"" + jstr(k) + "\":" + sec(v) }
       .mkString("{", ",", "}")
-    val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
+    val failedJson = failed.map(n => "\"" + jstr(n) + "\"").mkString("[", ",", "]")
     val total = results.map(_._2).sum
     val line =
       s"""{"queries":$qs,"failed":$failedJson,"n":${results.size}$filterJson$excludeJson,""" +

@@ -1,7 +1,6 @@
 package graft.compact
 
 import java.util.UUID
-import java.util.concurrent.Executors
 
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.hadoop.ParquetFileReader
@@ -9,16 +8,18 @@ import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-/** Many-tiny-leaf merge: N small output groups in ONE Spark job.
+/** Many-tiny-leaf merge: N small output groups in one staged write.
   *
   * The reference's daily reality is thousands of tiny leaves
   * (parquet_compactor.py:295-328 iterates them serially); the per-leaf
-  * [[Merger]] keeps that shape — one scan job + one write job per group —
+  * [[Merger]] keeps that shape — at least one write job per group —
   * which at swarm scale is driver-bound on fixed job overhead, not I/O.
   * Here a batch of schema-homogeneous tiny plans becomes:
   *
-  *   1. one multi-path scan of every input file, tagged with its plan's
-  *      `__gid` (dense plan index) via a broadcast path→gid join,
+  *   1. one scan of every input file, built from the driver's footer
+  *      probe ([[KnownFiles]]: no listing job, no schema-inference job),
+  *      tagged with its plan's `__gid` (dense plan index) via a
+  *      broadcast path→gid join,
   *   2. one `repartition(__gid)` + `partitionBy(__gid)` staged write —
   *      each group lands in its own `__gid=K/` subdir, WITHOUT the
   *      synthetic column (partitionBy keeps it out of the data files),
@@ -27,6 +28,9 @@ import org.apache.spark.sql.functions._
   *      originals) — exactly [[Merger]]'s invariants, still isolated per
   *      group: one failed validation skips only that plan.
   *
+  * A batch costs three Spark jobs whatever its size: the gid table's
+  * broadcast, the write's shuffle map stage and the write itself.
+  *
   * Plans whose input files disagree on footer schema (needs mergeSchema),
   * or that fail batch validation (e.g. a path the gid join couldn't tag),
   * fall back to the solo [[Merger]] — correctness never depends on the
@@ -34,42 +38,21 @@ import org.apache.spark.sql.functions._
   */
 object BatchMerger {
 
-  private final case class Probe(plan: LeafPlan, rowsIn: Long, schemas: Set[String])
-
-  /** Footer rows + distinct footer schemas per plan, on a bounded driver
-    * pool (same metadata-only discipline as Merger.footerRows; the probe
-    * doubles as the row-count anchor for commit validation).
-    */
-  private def probe(spark: SparkSession, plans: Seq[LeafPlan]): Seq[Probe] = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val pool = Executors.newFixedThreadPool(16)
-    try {
-      val futures = plans.map { p =>
-        pool.submit(new java.util.concurrent.Callable[Probe] {
-          override def call(): Probe = {
-            var rows = 0L
-            val schemas = scala.collection.mutable.Set.empty[String]
-            p.files.foreach { f =>
-              val r = ParquetFileReader.open(HadoopInputFile.fromPath(new Path(f), conf))
-              try {
-                rows += r.getRecordCount
-                schemas += r.getFooter.getFileMetaData.getSchema.toString
-              } finally r.close()
-            }
-            Probe(p, rows, schemas.toSet)
-          }
-        })
-      }
-      futures.map(_.get())
-    } finally { pool.shutdown(); () }
+  private final case class Probe(plan: LeafPlan, files: Seq[KnownFiles.Known]) {
+    val rowsIn: Long = files.map(_.rows).sum
+    val schemas: Set[String] = files.map(_.meta.getSchema.toString).toSet
   }
 
-  /** Scheme-strip normalization applied identically to driver-held paths
-    * and `input_file_name()` — "file:/x", "file:///x" and "/x" all map to
-    * "/x", so the gid join can't miss on URI-rendering differences.
+  /** Every input of every plan stat'ed and footer-read once
+    * ([[KnownFiles.probe]]): the footers give the schema split below,
+    * the row-count anchor for commit validation, and the scan's file
+    * index and schema, so the merge read lists and infers nothing.
     */
-  private val schemeRe = "^[a-zA-Z][a-zA-Z0-9+.-]*:/+"
-  private def norm(p: String): String = "/" + p.replaceFirst(schemeRe, "").dropWhile(_ == '/')
+  private def probe(spark: SparkSession, plans: Seq[LeafPlan]): Seq[Probe] = {
+    val known = KnownFiles.probe(spark, plans.flatMap(_.files))
+    val offsets = plans.scanLeft(0)(_ + _.files.size)
+    plans.zip(offsets).map { case (p, o) => Probe(p, known.slice(o, o + p.files.size)) }
+  }
 
   def mergeAndCommitBatch(spark: SparkSession, plans: Seq[LeafPlan], cfg: CompactorConfig): Seq[LeafResult] = {
     if (plans.isEmpty) return Seq.empty
@@ -106,16 +89,18 @@ object BatchMerger {
     val pathCol = s"__path_$runId"
     val gidCol = s"__gid_$runId"
     try {
+      // keyed by the exact string input_file_name() reports: the scan
+      // reads these very statuses, so both sides of the join render the
+      // path the same way (scheme, escaped spaces)
       val pathToGid = group.zipWithIndex.flatMap { case (p, gid) =>
-        p.plan.files.map(f => (norm(f), gid))
+        p.files.map(k => (k.inputFileName, gid))
       }
       val gidDf = broadcast(
         spark.createDataFrame(pathToGid).toDF(pathCol, gidCol),
       )
-      val allFiles = group.flatMap(_.plan.files)
-      val tagged = spark.read
-        .parquet(allFiles: _*)
-        .withColumn(pathCol, regexp_replace(input_file_name(), schemeRe, "/"))
+      val tagged = KnownFiles
+        .read(spark, group.flatMap(_.files), KnownFiles.sessionMergeSchema(spark))
+        .withColumn(pathCol, input_file_name())
         .join(gidDf, pathCol)
         .drop(pathCol)
       // ~one partition per group: every plan here is under targetFileBytes,

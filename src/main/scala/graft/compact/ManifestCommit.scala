@@ -277,11 +277,12 @@ object ManifestCommit {
       // publish-time tripwire aborts if a sidecar this fold didn't see
       // appears concurrently. Zero extra work when the leaf has none.
       val fold = foldForInputs(spark, plan.leaf, planRel.toSet, st0.deletes)
-      val rowsIn = Merger.footerRows(spark, files) - fold.appliedRows
+      val known = KnownFiles.probe(spark, files)
+      val rowsIn = known.map(_.rows).sum - fold.appliedRows
 
       val df = fold.applied match {
         case None =>
-          spark.read.option("mergeSchema", "true").parquet(files: _*)
+          KnownFiles.read(spark, known, mergeSchema = true)
         case Some(applied) =>
           antiJoinPositions(readWithPos(spark, plan.leaf, files), applied)
       }

@@ -3,8 +3,6 @@ package graft.compact
 import java.util.UUID
 
 import org.apache.hadoop.fs.Path
-import org.apache.parquet.hadoop.ParquetFileReader
-import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.SparkSession
 
 /** Merge + commit for one LeafPlan.
@@ -14,8 +12,11 @@ import org.apache.spark.sql.SparkSession
   * non-atomic, duplicating on partial failure (parquet_compactor.py:153-181,
   * :230-234, :327-328). Here (SURVEY.md §7.4):
   *
-  *   1. read all inputs in one multi-path scan (`mergeSchema=true` — the
-  *      schema unification pyarrow did implicitly, SURVEY.md §7.6.6),
+  *   1. probe every input's footer once on the driver, then read all
+  *      inputs in one scan built from that probe ([[KnownFiles]]: no
+  *      listing job, no schema-inference job); the schema is the
+  *      `mergeSchema` union of the footers — the schema unification
+  *      pyarrow did implicitly, SURVEY.md §7.6.6,
   *   2. coalesce (no shuffle) to ceil(totalBytes/targetFileBytes) output
   *      partitions and cap rows per file — the reference only row-caps,
   *      we also size-target,
@@ -31,32 +32,11 @@ import org.apache.spark.sql.SparkSession
   */
 object Merger {
 
-  /** Sum of row counts from parquet footers — metadata-only reads on the
-    * driver. Linear in file count; at extreme per-leaf file counts this
-    * loop is trivially parallelizable, but compaction's whole purpose is
-    * keeping these counts small.
+  /** Sum of row counts from parquet footers: metadata-only reads on a
+    * bounded driver pool ([[KnownFiles.probe]]), no Spark job.
     */
-  private[compact] def footerRows(spark: SparkSession, files: Seq[String]): Long = {
-    // Dedicated bounded pool: footer reads are blocking I/O and must not
-    // starve ExecutionContext.global (shared with concurrent merges).
-    val conf = spark.sparkContext.hadoopConfiguration
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(math.min(math.max(files.size, 1), 16))
-    try {
-      val futures = files.map { p =>
-        pool.submit(new java.util.concurrent.Callable[Long] {
-          override def call(): Long = {
-            val r = ParquetFileReader.open(HadoopInputFile.fromPath(new Path(p), conf))
-            try r.getRecordCount
-            finally r.close()
-          }
-        })
-      }
-      futures.map(_.get()).sum
-    } finally {
-      pool.shutdown()
-      ()
-    }
-  }
+  private[compact] def footerRows(spark: SparkSession, files: Seq[String]): Long =
+    KnownFiles.probe(spark, files).map(_.rows).sum
 
   /** Output partitioning sized by bytes AND rows (shared by both commit
     * modes): the row cap splits files anyway, so giving each prospective
@@ -155,14 +135,13 @@ object Merger {
     try {
       val fs = FileIndexer.fsFor(spark, plan.leaf)
 
-      // Input row count from parquet footers (metadata-only, no data
-      // scan) — sizes the output partitioning AND anchors the commit
-      // validation.
-      val rowsIn = footerRows(spark, plan.files)
-
-      val df = spark.read
-        .option("mergeSchema", "true")
-        .parquet(plan.files: _*)
+      // One footer probe per input (metadata-only, no data scan): its
+      // row counts size the output partitioning AND anchor the commit
+      // validation, and the scan reads from it with no listing or
+      // schema-inference job.
+      val known = KnownFiles.probe(spark, plan.files)
+      val rowsIn = known.map(_.rows).sum
+      val df = KnownFiles.read(spark, known, mergeSchema = true)
 
       stageWrite(spark, df, stagingDir, plan.totalBytes, rowsIn, cfg, runId)
 

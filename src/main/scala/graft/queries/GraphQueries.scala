@@ -203,8 +203,11 @@ object GraphQueries {
       // single-key bound AQE skew-join cannot split anyway, minus the
       // join machinery; basket size is bounded (~7 here) and a real
       // pipeline caps it upstream.
+      // a NULL order key joins nothing in the SQL's ok = ok self-join;
+      // groupBy would make one basket of every such row instead
       val pks = Tables.lineitem(s, d)
         .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
+        .where(col("ok").isNotNull)
         .groupBy("ok").agg(collect_set(col("pk")).as("pks"))
       // e0 (pair fanout + groupBy) feeds the two counts and the
       // thresholded edge set. The repartition above it is a

@@ -90,4 +90,23 @@ class BenchMetaSpec extends AnyFunSuite with Matchers {
     (why should not).include("parseable")
     (why should not).include("partial")
   }
+
+  private val json = new com.fasterxml.jackson.databind.ObjectMapper()
+
+  test("sec never emits NaN or Infinity: a non-finite time is null, and the line still parses") {
+    Seq(Double.NaN, Double.PositiveInfinity, Double.NegativeInfinity).foreach { v =>
+      Bench.sec(v) shouldBe "null"
+      json.readTree(s"""{"metric":"total","value":${Bench.sec(v)}}""").get("value").isNull shouldBe true
+    }
+    Bench.sec(1.5) shouldBe "1.5"
+    Bench.sec(0.0) shouldBe "0"
+  }
+
+  test("topEntriesJson escapes query names: quotes, backslashes and control characters still parse") {
+    val names = Seq("plain_q", "has\"quote", "back\\slash", "new\nline\ttab")
+    val mins = names.zipWithIndex.map { case (n, i) => (n, i + 1.0) } :+ ("nan_q" -> Double.NaN)
+    val tree = json.readTree(s"{${Bench.topEntriesJson(mins, 1000)}}")
+    names.foreach(n => withClue(n) { tree.get(n).asDouble() shouldBe (names.indexOf(n) + 1.0) })
+    tree.get("nan_q").isNull shouldBe true
+  }
 }

@@ -229,4 +229,29 @@ class QueryWitnessSpec extends AnyFunSuite with Matchers with SparkSpec {
   private implicit class Tap[A](private val a: A) {
     def tap(f: A => Unit): A = { f(a); a }
   }
+
+  test("graph_triangles: NULL order keys form no basket, as in its SQL's equi-join") {
+    val s = spark
+    import s.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft-tri-null").toFile
+    try {
+      // orders 1 and 2 share parts {1,2,3}: three w=2 edges, one triangle.
+      // The NULL-key rows would make a fourth basket {4,5,6} if grouped.
+      Seq[(Option[Long], Long)](
+        (Some(1L), 1L), (Some(1L), 2L), (Some(1L), 3L),
+        (Some(2L), 1L), (Some(2L), 2L), (Some(2L), 3L),
+        (None, 4L), (None, 5L), (None, 6L),
+      ).toDF("l_orderkey", "l_partkey").write.parquet(s"${dir.getAbsolutePath}/lineitem.parquet")
+      val got = SparkEntry.queries("graph_triangles")(s, dir.getAbsolutePath).collect().toSeq
+      Tables.lineitem(s, dir.getAbsolutePath).createOrReplaceTempView("lineitem")
+      val want =
+        try s.sql(SparkEntry.oracleSql("graph_triangles")).collect().toSeq
+        finally s.catalog.dropTempView("lineitem")
+      got shouldBe want
+      got.head.getLong(0) shouldBe 3L // n_pairs: only the two real orders' pairs
+    } finally {
+      def rm(f: java.io.File): Unit = { if (f.isDirectory) f.listFiles().foreach(rm); f.delete(); () }
+      rm(dir)
+    }
+  }
 }

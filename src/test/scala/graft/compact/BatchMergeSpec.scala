@@ -3,9 +3,7 @@ package graft.compact
 import java.io.File
 import java.nio.file.Files
 import java.time.LocalDate
-import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -75,24 +73,18 @@ class BatchMergeSpec extends AnyFunSuite with Matchers with SparkSpec with Befor
     val bagBefore = spark.read.parquet(root.getAbsolutePath + "/acct*/source=*/year=*/month=*")
       .collect().map(_.toString).sorted
 
-    val jobs = new AtomicInteger(0)
-    val listener = new SparkListener {
-      override def onJobStart(jobStart: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    val results =
-      try Compactor.run(spark, root.getAbsolutePath, cfg)
-      finally {
-        Thread.sleep(1500) // let the async listener bus drain job-start events
-        spark.sparkContext.removeSparkListener(listener)
-      }
+    val (results, jobs) = JobLog.of(spark)(Compactor.run(spark, root.getAbsolutePath, cfg))
 
     results.size shouldBe nLeaves
     results.foreach(r => withClue(r) { r.success shouldBe true })
-    // Solo merges cost >= 2 jobs per leaf (scan-infer + write); batched is
-    // a handful for the whole swarm (listing, planning, one merged write).
-    // Allow generous slack — the point is O(1), not an exact count.
-    withClue(s"jobs=${jobs.get()}") { jobs.get() should be < nLeaves }
+    // Solo merges cost >= 1 job per leaf; batched is a handful per slice
+    // (listing, planning, one merged write). Allow generous slack — the
+    // point is O(1) per slice, not an exact count.
+    withClue(jobs.mkString("\n")) {
+      jobs.size should be < nLeaves
+      // the run lists once (FileIndexer); no merge read re-lists its inputs
+      jobs.filter(_.description.startsWith("Listing leaf files")) shouldBe empty
+    }
 
     // row preservation + naming + originals gone, per leaf
     (0 until nLeaves).foreach { i =>
@@ -183,6 +175,75 @@ class BatchMergeSpec extends AnyFunSuite with Matchers with SparkSpec with Befor
     } finally {
       def rm(f: File): Unit = { if (f.isDirectory) f.listFiles().foreach(rm); f.delete(); () }
       rm(mroot)
+    }
+  }
+
+  /** A leaf of `files` tiny files each, compacted to one output. */
+  private def tinyLeaf(root: File, rel: String, files: Int, tag: String): LeafPlan = {
+    val leaf = new File(root, rel); leaf.mkdirs()
+    (0 until files).foreach(k => writeFile(leaf, s"f$k.parquet", df(s"$tag-$k")))
+    val fs = leaf.listFiles().filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
+    LeafPlan(leaf.getAbsolutePath, tag, fs.map(_.getAbsolutePath).toSeq, fs.map(_.length).sum)
+  }
+
+  private def rows(path: String): Seq[String] =
+    spark.read.parquet(path).collect().map(_.toString).toSeq.sorted
+
+  test("a batch over more than 32 inputs runs no listing and no schema-inference job") {
+    val jroot = Files.createTempDirectory("graft-batch-jobs").toFile
+    try {
+      // 12 leaves x 3 files = 36 inputs, above Spark's 32-path threshold
+      // for a distributed listing job; one leaf's path has a space and
+      // an '=', which input_file_name() renders escaped
+      val plans = (0 until 12).map { i =>
+        val part = if (i == 5) "source=s 5=odd" else f"source=s$i%02d"
+        tinyLeaf(jroot, s"acct/$part/year=2026/month=01", 3, f"s$i%02d")
+      }
+      val before = plans.map(p => rows(p.leaf))
+      val (results, jobs) = JobLog.of(spark)(BatchMerger.mergeAndCommitBatch(spark, plans, cfg))
+      results.foreach(r => withClue(r) { r.success shouldBe true })
+      withClue(jobs.mkString("\n")) {
+        jobs.filter(_.description.startsWith("Listing leaf files")) shouldBe empty
+        // schema inference is the one job outside a SQL execution
+        jobs.filterNot(_.sqlExecution) shouldBe empty
+        // the gid table's broadcast, the staged write's shuffle map stage
+        // and its write job. A solo fallback of any plan (e.g. a gid join
+        // miss on the escaped path) would add that plan's own write job.
+        jobs.size shouldBe 3
+      }
+      plans.zip(before).foreach { case (p, bag) =>
+        val names = new File(p.leaf).listFiles().map(_.getName).filter(_.endsWith(".parquet")).toSeq
+        withClue(s"${p.leaf}: $names") { names.size shouldBe 1 }
+        rows(p.leaf) shouldBe bag
+      }
+    } finally {
+      def rm(f: File): Unit = { if (f.isDirectory) f.listFiles().foreach(rm); f.delete(); () }
+      rm(jroot)
+    }
+  }
+
+  test("a solo merge of an evolving leaf submits no schema-merge job") {
+    val s = spark
+    import s.implicits._
+    val sroot = Files.createTempDirectory("graft-solo-jobs").toFile
+    try {
+      val leaf = new File(sroot, "acct/source=ev/year=2026/month=01"); leaf.mkdirs()
+      writeFile(leaf, "a.parquet", df("old"))
+      writeFile(leaf, "b.parquet", (1 to 5).map(i => (i.toLong, s"x$i", i * 1.5)).toDF("id", "tag", "score"))
+      val fs = leaf.listFiles().filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
+      val plan = LeafPlan(leaf.getAbsolutePath, "ev", fs.map(_.getAbsolutePath).toSeq, fs.map(_.length).sum)
+      val (r, jobs) = JobLog.of(spark)(Merger.mergeAndCommit(spark, plan, cfg))
+      withClue(r) { r.success shouldBe true }
+      withClue(jobs.mkString("\n")) {
+        jobs.filterNot(_.sqlExecution) shouldBe empty
+        jobs.size shouldBe 1 // the staged write
+      }
+      val out = spark.read.parquet(leaf.getAbsolutePath)
+      out.columns.toSet shouldBe Set("id", "tag", "score")
+      out.count() shouldBe 25
+    } finally {
+      def rm(f: File): Unit = { if (f.isDirectory) f.listFiles().foreach(rm); f.delete(); () }
+      rm(sroot)
     }
   }
 }

@@ -34,6 +34,7 @@ class AvgArraySpec extends AnyFunSuite with graft.SparkSpec {
     val slow = columnForm(df, 16)
     // bit-exact: compare the raw doubles, not a tolerance
     val joined = fast.as("f").join(slow.as("s"), "g")
+    assert(joined.count() === 60L) // every group compared, none lost to the join
     assert(joined.where(col("f.cv") =!= col("s.cv")).count() === 0L)
     assert(fast.count() === 60L)
   }
@@ -53,6 +54,7 @@ class AvgArraySpec extends AnyFunSuite with graft.SparkSpec {
     val fast = df.groupBy("g").agg(expr("avg_array(v, 3)").as("cv"))
     val slow = columnForm(df, 3)
     val joined = fast.as("f").join(slow.as("s"), "g")
+    assert(joined.count() === 2L)
     assert(joined.where(not(col("f.cv") <=> col("s.cv"))).count() === 0L)
     // hand-derived: group 1 pos0 = (1+5)/2, pos1 = 7 (the only non-null),
     // pos2 = 3 (the only non-null); group 2 all null
@@ -85,7 +87,8 @@ class AvgArraySpec extends AnyFunSuite with graft.SparkSpec {
       .groupBy("g").agg(expr("avg_array(v, 16)").as("cv"))
     val many = rows.toDF("g", "v").repartition(16)
       .groupBy("g").agg(expr("avg_array(v, 16)").as("cv"))
-    assert(one.as("a").join(many.as("b"), "g")
-      .where(col("a.cv") =!= col("b.cv")).count() === 0L)
+    val joined = one.as("a").join(many.as("b"), "g")
+    assert(joined.count() === 40L)
+    assert(joined.where(col("a.cv") =!= col("b.cv")).count() === 0L)
   }
 }
