@@ -2,22 +2,25 @@ package graft
 import org.apache.spark.sql.SparkSession
 object Bench {
 
-  /** Parse a BENCH_DETAIL file's per-query minima ("name": [t1, t2,…]).
-    * Regex over our own fixed format — no JSON dependency.
+  /** A BENCH_DETAIL file's per-query minima (`"name": [t1, t2, …]`), read
+    * with the same Jackson tree as [[baselineRefusal]]. `_`-prefixed keys
+    * are metadata, and a null time is a non-finite run ([[sec]]): both are
+    * skipped, so a query keeps its baseline from its finite passes. A
+    * missing or unparseable file gives no baseline.
     */
-  private def readDetailMins(path: java.nio.file.Path): Map[String, Double] =
+  private[graft] def readDetailMins(path: java.nio.file.Path): Map[String, Double] =
     if (!java.nio.file.Files.exists(path)) Map.empty
-    else {
-      val text = java.nio.file.Files.readString(path)
-      """"([A-Za-z0-9_]+)":\s*\[([0-9., ]+)\]""".r.findAllMatchIn(text).flatMap { m =>
-        val name = m.group(1)
-        if (name.startsWith("_")) None
-        else {
-          val vs = m.group(2).split(',').map(_.trim).filter(_.nonEmpty).flatMap(_.toDoubleOption)
-          if (vs.isEmpty) None else Some(name -> vs.min)
-        }
-      }.toMap
-    }
+    else
+      try {
+        import scala.jdk.CollectionConverters._
+        new com.fasterxml.jackson.databind.ObjectMapper()
+          .readTree(java.nio.file.Files.readAllBytes(path))
+          .properties().asScala.iterator.flatMap { e =>
+            val times = e.getValue.asScala.filter(_.isNumber).map(_.doubleValue)
+            if (e.getKey.startsWith("_") || !e.getValue.isArray || times.isEmpty) None
+            else Some(e.getKey -> times.min)
+          }.toMap
+      } catch { case scala.util.control.NonFatal(_) => Map.empty }
 
   /** Why a detail file must be REFUSED as a regression baseline, None
     * when it is usable. A PARTIAL run (filter/exclude in `_meta`)

@@ -5,7 +5,7 @@ import java.util.UUID
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Many-tiny-leaf merge: N small output groups in one staged write.
@@ -18,8 +18,8 @@ import org.apache.spark.sql.functions._
   *
   *   1. one scan of every input file, built from the driver's footer
   *      probe ([[KnownFiles]]: no listing job, no schema-inference job),
-  *      tagged with its plan's `__gid` (dense plan index) via a
-  *      broadcast path→gid join,
+  *      tagged with its plan's `__gid` (dense plan index) by a hash
+  *      lookup of `input_file_name()` ([[withGid]]),
   *   2. one `repartition(__gid)` + `partitionBy(__gid)` staged write —
   *      each group lands in its own `__gid=K/` subdir, WITHOUT the
   *      synthetic column (partitionBy keeps it out of the data files),
@@ -28,11 +28,11 @@ import org.apache.spark.sql.functions._
   *      originals) — exactly [[Merger]]'s invariants, still isolated per
   *      group: one failed validation skips only that plan.
   *
-  * A batch costs three Spark jobs whatever its size: the gid table's
-  * broadcast, the write's shuffle map stage and the write itself.
+  * A batch costs two Spark jobs whatever its size: the write's shuffle
+  * map stage and the write itself.
   *
   * Plans whose input files disagree on footer schema (needs mergeSchema),
-  * or that fail batch validation (e.g. a path the gid join couldn't tag),
+  * or that fail batch validation (e.g. a path the gid lookup couldn't tag),
   * fall back to the solo [[Merger]] — correctness never depends on the
   * batch path succeeding.
   */
@@ -83,26 +83,21 @@ object BatchMerger {
     val runId = UUID.randomUUID().toString.replace("-", "")
     val stagingRoot = s"${group.head.plan.leaf}/.staging-$runId"
     val fs = FileIndexer.fsFor(spark, group.head.plan.leaf)
-    // runId-suffixed helper columns: a data column literally named
-    // "__gid"/"__path" must survive the merge untouched (withColumn would
+    // runId-suffixed helper column: a data column literally named
+    // "__gid" must survive the merge untouched (withColumn would
     // silently REPLACE it and drop real data)
-    val pathCol = s"__path_$runId"
     val gidCol = s"__gid_$runId"
     try {
       // keyed by the exact string input_file_name() reports: the scan
-      // reads these very statuses, so both sides of the join render the
-      // path the same way (scheme, escaped spaces)
+      // reads these very statuses, so both sides render the path the
+      // same way (scheme, escaped spaces)
       val pathToGid = group.zipWithIndex.flatMap { case (p, gid) =>
-        p.files.map(k => (k.inputFileName, gid))
-      }
-      val gidDf = broadcast(
-        spark.createDataFrame(pathToGid).toDF(pathCol, gidCol),
+        p.files.map(k => k.inputFileName -> gid)
+      }.toMap
+      val tagged = withGid(
+        KnownFiles.read(spark, group.flatMap(_.files), KnownFiles.sessionMergeSchema(spark)),
+        pathToGid, gidCol,
       )
-      val tagged = KnownFiles
-        .read(spark, group.flatMap(_.files), KnownFiles.sessionMergeSchema(spark))
-        .withColumn(pathCol, input_file_name())
-        .join(gidDf, pathCol)
-        .drop(pathCol)
       // ~one partition per group: every plan here is under targetFileBytes,
       // so a group is at most one output file (modulo the row cap, which
       // maxRecordsPerFile still enforces). Hash collisions just mean one
@@ -129,6 +124,18 @@ object BatchMerger {
         System.err.println(s"[compact] batch merge failed (${e.toString}); retrying ${group.size} plans solo")
         Compactor.runPlans(spark, group.map(_.plan), cfg)
     }
+  }
+
+  /** `df` with its rows' plan index in `gidCol`, looked up by
+    * `input_file_name()` in a hash map shipped with the task closure —
+    * no job, unlike a broadcast join, and O(1) per row, unlike Catalyst's
+    * literal-map `element_at`, which scans the keys. A row whose file is
+    * missing from the map is dropped, so no plan's stage holds it and
+    * that plan fails row-count validation and falls back solo.
+    */
+  private[compact] def withGid(df: DataFrame, pathToGid: Map[String, Int], gidCol: String): DataFrame = {
+    val gidOf = udf((path: String) => pathToGid.get(path))
+    df.withColumn(gidCol, gidOf(input_file_name())).where(col(gidCol).isNotNull)
   }
 
   /** Validate one plan's staged subdir against its input footer rows and
@@ -261,18 +268,8 @@ object BatchMerger {
       // same pre-publish sidecar discipline as the solo manifest path:
       // sidecars are debris until the manifest seals, reclaimed with
       // the data dir on rollback
-      val outsAbs = outputsRel.map(rel => rel -> s"${p.plan.leaf}/$rel")
-      if (cfg.statsColumns.nonEmpty) {
-        val st = ManifestStats.collect(spark, outsAbs, cfg.statsColumns)
-        if (st.nonEmpty) ManifestStats.write(fs, p.plan.leaf, runId, st)
-      }
-      if (cfg.bloomColumns.nonEmpty) {
-        val bl = ManifestStats.collectBlooms(
-          spark, outsAbs, cfg.bloomColumns,
-          expectedItems = cfg.maxRowsPerFile, numBits = cfg.bloomBitsPerItem.toLong * cfg.maxRowsPerFile,
-        )
-        if (bl.nonEmpty) ManifestStats.writeBlooms(fs, p.plan.leaf, runId, bl)
-      }
+      ManifestStats.writeSidecars(
+        spark, fs, p.plan.leaf, runId, outputsRel.map(rel => rel -> s"${p.plan.leaf}/$rel"), cfg)
       val inputsRel = p.plan.files.map(ManifestCommit.relativeTo(p.plan.leaf, _))
       // the batch path reads plan files RAW, so it is only correct on a
       // leaf with no merge-on-read delete sidecars (Compactor routes

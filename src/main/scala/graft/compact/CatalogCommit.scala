@@ -1,7 +1,5 @@
 package graft.compact
 
-import java.nio.charset.StandardCharsets
-
 import scala.collection.mutable
 
 import org.apache.hadoop.fs.{FileSystem, Path}
@@ -85,7 +83,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object CatalogCommit {
 
-  private val sealMark = "\"sealed\":true}"
   private val nameRe = "_cat-(\\d+)\\.json".r
   private val grpNameRe = "_grp-(\\d+)-.*\\.json".r
 
@@ -122,9 +119,9 @@ object CatalogCommit {
   /** A parsed root snapshot file — inline (pin map in the root) or
     * grouped (gid → group-manifest references).
     */
-  private sealed trait Root { def seq: Long }
-  private final case class InlineRoot(seq: Long, leaves: Map[String, Long]) extends Root
-  private final case class GroupedRoot(seq: Long, gcount: Int, groups: Map[Int, String]) extends Root
+  private[compact] sealed trait Root { def seq: Long }
+  private[compact] final case class InlineRoot(seq: Long, leaves: Map[String, Long]) extends Root
+  private[compact] final case class GroupedRoot(seq: Long, gcount: Int, groups: Map[Int, String]) extends Root
 
   /** Group manifests are create-only and immutable, so one parse per
     * NAME is sound across any number of referencing roots — the memo
@@ -166,28 +163,14 @@ object CatalogCommit {
   private def fsFor(spark: SparkSession, root: String): FileSystem =
     new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  /** Raw file text — IO failures THROW (callers that want step-down
+  /** Raw file bytes — IO failures THROW (callers that want step-down
     * semantics catch; [[expire]]'s GC reference scan must not, because
     * for it "couldn't read" and "torn" have opposite safe defaults).
     */
-  private def readTextIO(fs: FileSystem, p: Path): String = {
+  private def readBytesIO(fs: FileSystem, p: Path): Array[Byte] = {
     val in = fs.open(p)
-    try new String(in.readAllBytes(), StandardCharsets.UTF_8)
+    try in.readAllBytes()
     finally in.close()
-  }
-
-  private def readSealedText(fs: FileSystem, p: Path): Option[String] = {
-    val text =
-      try readTextIO(fs, p)
-      catch {
-        // read-path step-down: an unreadable file yields None (the
-        // caller resolves the previous sealed snapshot) — but only for
-        // genuine IO states; interrupts re-assert and propagate, fatal
-        // errors propagate (same discipline as rootState, advice r19)
-        case e: InterruptedException => Thread.currentThread().interrupt(); throw e
-        case scala.util.control.NonFatal(_) => return None
-      }
-    if (text.endsWith(sealMark)) Some(text) else None
   }
 
   /** Classification of one root snapshot FILE where "couldn't read"
@@ -213,7 +196,7 @@ object CatalogCommit {
   private final case class Unreadable(cause: Throwable) extends RootState
 
   private def rootState(fs: FileSystem, p: Path): RootState =
-    (try Right(readTextIO(fs, p))
+    (try Right(readBytesIO(fs, p))
     catch {
       case _: java.io.FileNotFoundException => Left(AbsentFile: RootState)
       case e: InterruptedException =>
@@ -227,27 +210,19 @@ object CatalogCommit {
       // fatal errors (OOM, LinkageError) propagate — they are not a
       // statement about THIS file either
     }) match {
-      case Right(text) => parseRootText(text).map(SealedAs.apply).getOrElse(TornFile)
+      case Right(bytes) => MetaCodec.decodeRoot(bytes).map(SealedAs.apply).getOrElse(TornFile)
       case Left(st)    => st
     }
 
-  private def parseLeaves(text: String): Map[String, Long] =
-    """\{"p":"([^"]+)","s":(\d+)\}""".r.findAllMatchIn(text)
-      .map(m => m.group(1) -> m.group(2).toLong).toMap
-
-  private def parseRootText(text: String): Option[Root] =
-    if (!text.endsWith(sealMark)) None
-    else """"seq":(\d+)""".r.findFirstMatchIn(text).map(_.group(1).toLong).map { seq =>
-      if (text.contains(""""groups":""")) {
-        val g = """"gcount":(\d+)""".r.findFirstMatchIn(text).map(_.group(1).toInt).getOrElse(1)
-        val groups = """\{"g":(\d+),"f":"([^"]+)"\}""".r.findAllMatchIn(text)
-          .map(m => m.group(1).toInt -> m.group(2)).toMap
-        GroupedRoot(seq, math.max(1, g), groups)
-      } else InlineRoot(seq, parseLeaves(text))
-    }
-
+  /** Read-path step-down: torn, absent AND unreadable all yield None
+    * (the caller resolves the previous sealed snapshot); interrupts and
+    * fatal errors propagate as in [[rootState]].
+    */
   private def parseRoot(fs: FileSystem, p: Path): Option[Root] =
-    readSealedText(fs, p).flatMap(parseRootText)
+    rootState(fs, p) match {
+      case SealedAs(r) => Some(r)
+      case _           => None
+    }
 
   private def cachedGroup(fs: FileSystem, root: String, name: String, cache: GroupCache): Option[Map[String, Long]] =
     cache.getOrElseUpdate(
@@ -257,10 +232,10 @@ object CatalogCommit {
         // transient read failure THROWS uncached — negative-caching an
         // IO hiccup would poison every later pin()/resolve on the same
         // snapshot even after storage heals (review r19)
-        val text =
-          try Some(readTextIO(fs, new Path(s"$root/$name")))
+        val bytes =
+          try Some(readBytesIO(fs, new Path(s"$root/$name")))
           catch { case _: java.io.FileNotFoundException => None }
-        text.filter(_.endsWith(sealMark)).map(parseLeaves)
+        bytes.flatMap(MetaCodec.decodeGroup)
       },
     )
 
@@ -344,23 +319,13 @@ object CatalogCommit {
       newGroups: Map[Int, (String, Map[String, Long])],
       cache: GroupCache,
   ): Unit = {
-    def writeOne(gid: Int, name: String, lv: Map[String, Long]): Unit = {
-      val out = fs.create(new Path(s"$root/$name"), false)
-      try out.write((s"""{"seq":$seq,"g":$gid,"leaves":${pinBodyJson(lv)},""" + sealMark)
-        .getBytes(StandardCharsets.UTF_8))
-      finally out.close()
-    }
     val batch = newGroups.toSeq.sortBy(_._1)
     // first failure propagates and aborts the publish
-    boundedPar(batch) { case (gid, (name, lv)) => writeOne(gid, name, lv) }
+    boundedPar(batch) { case (gid, (name, lv)) =>
+      MetaCodec.write(fs, new Path(s"$root/$name"), MetaCodec.encodeGroup(seq, gid, lv))
+    }
     batch.foreach { case (_, (name, lv)) => cache(name) = Some(lv) }
   }
-
-  /** The sorted pin-array JSON body shared by root (inline) and group
-    * manifests.
-    */
-  private def pinBodyJson(lv: Map[String, Long]): String =
-    lv.toSeq.sortBy(_._1).map { case (p, s) => s"""{"p":"$p","s":$s}""" }.mkString("[", ",", "]")
 
   private def groupOrThrow(
       fs: FileSystem, root: String, rootSeq: Long, gid: Int, name: String, cache: GroupCache,
@@ -547,16 +512,10 @@ object CatalogCommit {
       groups: Option[Int] = None,
   ): Snapshot = {
     require(updates.nonEmpty, "a catalog publish must pin at least one leaf")
-    updates.keys.foreach { k =>
-      // the parser's pin regex requires a NON-EMPTY path — an empty key
-      // would seal fine and then silently vanish from every resolution
-      // (review r19), the opposite of the loud-failure contract
-      require(k.nonEmpty, "a catalog leaf path must be non-empty")
-      require(
-        !k.exists(c => c == '"' || c == '\\' || c == ']' || c == ','),
-        s"unencodable leaf path: $k",
-      )
-    }
+    // an empty relative path names the catalog root itself, not a
+    // member leaf (the decoder skips such a pin, so it would seal and
+    // then silently vanish from every resolution)
+    updates.keys.foreach(k => require(k.nonEmpty, "a catalog leaf path must be non-empty"))
     val fs = fsFor(spark, root)
     fs.mkdirs(new Path(root))
     val cache = newCache
@@ -568,13 +527,12 @@ object CatalogCommit {
     val targetGroups: Option[Int] = groups.orElse(cur.collect { case g: GroupedRoot => g.gcount })
     targetGroups.foreach(g => require(g > 0, s"catalog group count must be positive: $g"))
 
-    // (root body for a given seq, referenced group files, snapshot builder)
-    val (bodyFor, refFiles, mkSnapshot): (Long => String, Seq[String], Long => Snapshot) =
+    // (root record for a given seq, referenced group files, snapshot builder)
+    val (bodyFor, refFiles, mkSnapshot): (Long => Array[Byte], Seq[String], Long => Snapshot) =
       targetGroups match {
         case None =>
           val base = cur.map(r => resolveAll(fs, root, r, cache)).getOrElse(Map.empty) ++ updates
-          val body = pinBodyJson(base)
-          ((seq: Long) => s"""{"seq":$seq,"leaves":$body,""" + sealMark, Seq.empty,
+          ((seq: Long) => MetaCodec.encodeInlineRoot(seq, base), Seq.empty,
             (seq: Long) => Snapshot(seq, base))
         case Some(g) =>
           val updByGid = updates.groupBy { case (p, _) => groupOf(p, g) }
@@ -612,9 +570,7 @@ object CatalogCommit {
           // state (~1 touched group) stays on the calling thread.
           writeGroups(fs, root, seq0, newGroups, cache)
           val refs: Map[Int, String] = carried ++ newGroups.map { case (gid, (name, _)) => gid -> name }
-          val refsBody = refs.toSeq.sortBy(_._1)
-            .map { case (gid, f) => s"""{"g":$gid,"f":"$f"}""" }.mkString("[", ",", "]")
-          ((seq: Long) => s"""{"seq":$seq,"gcount":$g,"groups":$refsBody,""" + sealMark,
+          ((seq: Long) => MetaCodec.encodeGroupedRoot(seq, g, refs),
             refs.values.toSeq.sorted,
             // reuse the publish's own cache: the just-written groups
             // are seeded, so neither pin nor full resolution re-reads
@@ -624,7 +580,6 @@ object CatalogCommit {
     var seq = seq0
     var attempts = 0
     while (true) {
-      val json = bodyFor(seq)
       val target = new Path(s"$root/${snapName(seq)}")
       val created =
         try Some(fs.create(target, false))
@@ -671,7 +626,7 @@ object CatalogCommit {
       created match {
         case Some(out) =>
           onCreated(seq)
-          try out.write(json.getBytes(StandardCharsets.UTF_8))
+          try out.write(bodyFor(seq))
           finally out.close()
           def retract(): Unit =
             try { fs.delete(target, false); () } catch { case _: Throwable => () }
@@ -913,8 +868,8 @@ object CatalogCommit {
     // root deletion below stays purely name-based and safe.
     var scanComplete = true
     def groupRefsOf(e: org.apache.hadoop.fs.FileStatus): Iterable[String] = {
-      val text =
-        try Some(readTextIO(fs, e.getPath))
+      val bytes =
+        try Some(readBytesIO(fs, e.getPath))
         catch {
           case _: java.io.FileNotFoundException =>
             // GONE is not unreadable: a racer (another expire, a
@@ -933,7 +888,7 @@ object CatalogCommit {
             scanComplete = false
             None
         }
-      text.flatMap(parseRootText) match {
+      bytes.flatMap(MetaCodec.decodeRoot) match {
         case Some(GroupedRoot(_, _, groups)) => groups.values
         case _                               => Seq.empty
       }

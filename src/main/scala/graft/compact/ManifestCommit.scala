@@ -1,6 +1,5 @@
 package graft.compact
 
-import java.nio.charset.StandardCharsets
 import java.util.UUID
 
 import org.apache.hadoop.fs.{FileSystem, Path}
@@ -54,8 +53,6 @@ final class ConcurrentCommitException(leaf: String, seq: Long, otherRunId: Strin
     )
 
 object ManifestCommit {
-
-  private val sealMark = "\"sealed\":true}"
 
   /** How a rewrite folds the leaf's outstanding merge-on-read delete
     * sidecars (see [[foldForInputs]]): `touchingRel` are the sidecar
@@ -223,6 +220,23 @@ object ManifestCommit {
     } catch { case _: Throwable => () }
   }
 
+  /** Roll back a failed commit. Order matters: a torn-or-even-complete
+    * manifest (e.g. close() threw after a full write) must go BEFORE the
+    * data — a sealed manifest naming deleted outputs would break readers.
+    * If the manifest can't be removed, everything stays so the
+    * (manifest, data) pair stays consistent; otherwise the data dir, the
+    * row-level delete stages and the stats/bloom sidecars go too.
+    */
+  private def rollback(spark: SparkSession, leaf: String, stem: String, runId: String, dataDir: Option[String]): Unit =
+    (try Some(FileIndexer.fsFor(spark, leaf)) catch { case _: Throwable => None }).foreach { fs =>
+      val mp = new Path(s"$leaf/_manifest-$stem-$runId.json")
+      if (try { fs.delete(mp, false); !fs.exists(mp) } catch { case _: Throwable => false }) {
+        dataDir.foreach(d => try { fs.delete(new Path(d), true); () } catch { case _: Throwable => () })
+        cleanupRunSidecars(fs, leaf, runId)
+        ManifestStats.deleteSidecars(fs, leaf, runId)
+      }
+    }
+
   private def writeDeleteSidecar(
       spark: SparkSession,
       fs: FileSystem,
@@ -307,23 +321,7 @@ object ManifestCommit {
       // sidecar is debris beside the data dir (same reclaim path), and a
       // sidecar is only consulted for files a sealed manifest made live.
       val outputsRel = outFiles.map(p => s".data-$runId/${p.getName}")
-      if (cfg.statsColumns.nonEmpty) {
-        val st = ManifestStats.collect(
-          spark, outputsRel.zip(outFiles.map(_.toString)), cfg.statsColumns,
-        )
-        if (st.nonEmpty) ManifestStats.write(fs, plan.leaf, runId, st)
-      }
-      if (cfg.bloomColumns.nonEmpty) {
-        // sized to the per-file row cap: bloomBitsPerItem=16 holds a
-        // 50-key batch probe's compounded fpp at ≈2% (StatsBench
-        // bits-ladder + fpp50); an oversized bloom costs every future
-        // reader its sidecar bytes
-        val bl = ManifestStats.collectBlooms(
-          spark, outputsRel.zip(outFiles.map(_.toString)), cfg.bloomColumns,
-          expectedItems = cfg.maxRowsPerFile, numBits = cfg.bloomBitsPerItem.toLong * cfg.maxRowsPerFile,
-        )
-        if (bl.nonEmpty) ManifestStats.writeBlooms(fs, plan.leaf, runId, bl)
-      }
+      ManifestStats.writeSidecars(spark, fs, plan.leaf, runId, outputsRel.zip(outFiles.map(_.toString)), cfg)
 
       // Residual delete sidecars BEFORE the commit point — debris until
       // the manifest seals, exactly like the data stage.
@@ -369,23 +367,7 @@ object ManifestCommit {
       )
     } catch {
       case e: Throwable =>
-        // Rollback order matters: a torn-or-even-complete manifest (e.g.
-        // close() threw after a full write) must go BEFORE the data dir —
-        // a sealed manifest naming deleted outputs would break readers.
-        // If the manifest can't be removed, leave the data dir intact so
-        // the (manifest, data) pair stays consistent.
-        val fsR = try Some(FileIndexer.fsFor(spark, plan.leaf)) catch { case _: Throwable => None }
-        val manifestGone = fsR.exists { f =>
-          val mp = new Path(s"${plan.leaf}/_manifest-${plan.stem}-$runId.json")
-          try { f.delete(mp, false); !f.exists(mp) }
-          catch { case _: Throwable => false }
-        }
-        if (manifestGone) {
-          try fsR.foreach(_.delete(new Path(dataDir), true))
-          catch { case _: Throwable => () }
-          fsR.foreach(cleanupRunSidecars(_, plan.leaf, runId))
-          fsR.foreach(ManifestStats.deleteSidecars(_, plan.leaf, runId))
-        }
+        rollback(spark, plan.leaf, plan.stem, runId, Some(dataDir))
         LeafResult(plan.leaf, plan.stem, success = false, 0L, 0, Some(e.toString))
     }
   }
@@ -526,20 +508,10 @@ object ManifestCommit {
         ))
       }
       val outputsRel = outFiles.map(p => s".data-$runId/${p.getName}")
-      if (cfg.statsColumns.nonEmpty && outputsRel.nonEmpty) {
-        val st = ManifestStats.collect(spark, outputsRel.zip(outFiles.map(_.toString)), cfg.statsColumns)
-        if (st.nonEmpty) ManifestStats.write(fs, leaf, runId, st)
-      }
-      // bloom sidecars too, mirroring mergeAndCommit — without them the
+      // bloom sidecars too, like every rewrite path — without them the
       // survivors of a retention delete silently lose string-equality
-      // pruning that every other rewrite path preserves
-      if (cfg.bloomColumns.nonEmpty && outputsRel.nonEmpty) {
-        val bl = ManifestStats.collectBlooms(
-          spark, outputsRel.zip(outFiles.map(_.toString)), cfg.bloomColumns,
-          expectedItems = cfg.maxRowsPerFile, numBits = cfg.bloomBitsPerItem.toLong * cfg.maxRowsPerFile,
-        )
-        if (bl.nonEmpty) ManifestStats.writeBlooms(fs, leaf, runId, bl)
-      }
+      // pruning
+      ManifestStats.writeSidecars(spark, fs, leaf, runId, outputsRel.zip(outFiles.map(_.toString)), cfg)
       val deletesRel = writeFoldResiduals(spark, fs, leaf, runId, fold)
       val inputsRel = inputsDataRel ++ fold.touchingRel
       publish(
@@ -566,18 +538,7 @@ object ManifestCommit {
       ))
     } catch {
       case e: Throwable =>
-        val fsR = try Some(FileIndexer.fsFor(spark, leaf)) catch { case _: Throwable => None }
-        val manifestGone = fsR.exists { f =>
-          val mp = new Path(s"$leaf/_manifest-$stem-$runId.json")
-          try { f.delete(mp, false); !f.exists(mp) }
-          catch { case _: Throwable => false }
-        }
-        if (manifestGone) {
-          try fsR.foreach(_.delete(new Path(dataDir), true))
-          catch { case _: Throwable => () }
-          fsR.foreach(cleanupRunSidecars(_, leaf, runId))
-          fsR.foreach(ManifestStats.deleteSidecars(_, leaf, runId))
-        }
+        rollback(spark, leaf, stem, runId, Some(dataDir))
         Some(LeafResult(leaf, stem, success = false, 0L, 0, Some(e.toString)))
     }
   }
@@ -684,17 +645,7 @@ object ManifestCommit {
         ))
       }
       val outputsRel = outFiles.map(p => s".data-$runId/${p.getName}")
-      if (cfg.statsColumns.nonEmpty && outputsRel.nonEmpty) {
-        val st = ManifestStats.collect(spark, outputsRel.zip(outFiles.map(_.toString)), cfg.statsColumns)
-        if (st.nonEmpty) ManifestStats.write(fs, leaf, runId, st)
-      }
-      if (cfg.bloomColumns.nonEmpty && outputsRel.nonEmpty) {
-        val bl = ManifestStats.collectBlooms(
-          spark, outputsRel.zip(outFiles.map(_.toString)), cfg.bloomColumns,
-          expectedItems = cfg.maxRowsPerFile, numBits = cfg.bloomBitsPerItem.toLong * cfg.maxRowsPerFile,
-        )
-        if (bl.nonEmpty) ManifestStats.writeBlooms(fs, leaf, runId, bl)
-      }
+      ManifestStats.writeSidecars(spark, fs, leaf, runId, outputsRel.zip(outFiles.map(_.toString)), cfg)
       val deletesRel = writeFoldResiduals(spark, fs, leaf, runId, fold)
       val inputsRel = inputsDataRel ++ fold.touchingRel
       publish(
@@ -722,18 +673,7 @@ object ManifestCommit {
       ))
     } catch {
       case e: Throwable =>
-        val fsR = try Some(FileIndexer.fsFor(spark, leaf)) catch { case _: Throwable => None }
-        val manifestGone = fsR.exists { f =>
-          val mp = new Path(s"$leaf/_manifest-$stem-$runId.json")
-          try { f.delete(mp, false); !f.exists(mp) }
-          catch { case _: Throwable => false }
-        }
-        if (manifestGone) {
-          try fsR.foreach(_.delete(new Path(dataDir), true))
-          catch { case _: Throwable => () }
-          fsR.foreach(cleanupRunSidecars(_, leaf, runId))
-          fsR.foreach(ManifestStats.deleteSidecars(_, leaf, runId))
-        }
+        rollback(spark, leaf, stem, runId, Some(dataDir))
         Some(LeafResult(leaf, stem, success = false, 0L, 0, Some(e.toString)))
     }
   }
@@ -807,15 +747,7 @@ object ManifestCommit {
       Some(LeafResult(leaf, stem, success = true, drows, 0, None))
     } catch {
       case e: Throwable =>
-        val fsR = try Some(FileIndexer.fsFor(spark, leaf)) catch { case _: Throwable => None }
-        val manifestGone = fsR.exists { f =>
-          val mp = new Path(s"$leaf/_manifest-$stem-$runId.json")
-          try { f.delete(mp, false); !f.exists(mp) }
-          catch { case _: Throwable => false }
-        }
-        if (manifestGone) {
-          fsR.foreach(cleanupRunSidecars(_, leaf, runId))
-        }
+        rollback(spark, leaf, stem, runId, None)
         Some(LeafResult(leaf, stem, success = false, 0L, 0, Some(e.toString)))
     }
   }
@@ -942,13 +874,7 @@ object ManifestCommit {
         Some(LeafResult(leaf, stem, success = true, nKeys, 0, None))
       } catch {
         case e: Throwable =>
-          val fsR = try Some(FileIndexer.fsFor(spark, leaf)) catch { case _: Throwable => None }
-          val manifestGone = fsR.exists { f =>
-            val mp = new Path(s"$leaf/_manifest-$stem-$runId.json")
-            try { f.delete(mp, false); !f.exists(mp) }
-            catch { case _: Throwable => false }
-          }
-          if (manifestGone) fsR.foreach(cleanupRunSidecars(_, leaf, runId))
+          rollback(spark, leaf, stem, runId, None)
           Some(LeafResult(leaf, stem, success = false, 0L, 0, Some(e.toString)))
       }
     } finally { keysD.unpersist(); () }
@@ -1012,15 +938,7 @@ object ManifestCommit {
       ))
     } catch {
       case e: Throwable =>
-        val fsR = try Some(FileIndexer.fsFor(spark, leaf)) catch { case _: Throwable => None }
-        val manifestGone = fsR.exists { f =>
-          val mp = new Path(s"$leaf/_manifest-$stem-$runId.json")
-          try { f.delete(mp, false); !f.exists(mp) }
-          catch { case _: Throwable => false }
-        }
-        if (manifestGone) {
-          fsR.foreach(cleanupRunSidecars(_, leaf, runId))
-        }
+        rollback(spark, leaf, stem, runId, None)
         Some(LeafResult(leaf, stem, success = false, 0L, 0, Some(e.toString)))
     }
   }
@@ -1207,17 +1125,7 @@ object ManifestCommit {
           ))
         }
         val outputsRel = outFiles.map(p => s".data-$runId/${p.getName}")
-        if (cfg.statsColumns.nonEmpty && outputsRel.nonEmpty) {
-          val st = ManifestStats.collect(spark, outputsRel.zip(outFiles.map(_.toString)), cfg.statsColumns)
-          if (st.nonEmpty) ManifestStats.write(fs, leaf, runId, st)
-        }
-        if (cfg.bloomColumns.nonEmpty && outputsRel.nonEmpty) {
-          val bl = ManifestStats.collectBlooms(
-            spark, outputsRel.zip(outFiles.map(_.toString)), cfg.bloomColumns,
-            expectedItems = cfg.maxRowsPerFile, numBits = cfg.bloomBitsPerItem.toLong * cfg.maxRowsPerFile,
-          )
-          if (bl.nonEmpty) ManifestStats.writeBlooms(fs, leaf, runId, bl)
-        }
+        ManifestStats.writeSidecars(spark, fs, leaf, runId, outputsRel.zip(outFiles.map(_.toString)), cfg)
         val deletesRel = writeFoldResiduals(spark, fs, leaf, runId, fold)
         publish(
           fs, leaf, stem, runId,
@@ -1253,18 +1161,7 @@ object ManifestCommit {
         ))
       } catch {
         case e: Throwable =>
-          val fsR = try Some(FileIndexer.fsFor(spark, leaf)) catch { case _: Throwable => None }
-          val manifestGone = fsR.exists { f =>
-            val mp = new Path(s"$leaf/_manifest-$stem-$runId.json")
-            try { f.delete(mp, false); !f.exists(mp) }
-            catch { case _: Throwable => false }
-          }
-          if (manifestGone) {
-            try fsR.foreach(_.delete(new Path(dataDir), true))
-            catch { case _: Throwable => () }
-            fsR.foreach(cleanupRunSidecars(_, leaf, runId))
-            fsR.foreach(ManifestStats.deleteSidecars(_, leaf, runId))
-          }
+          rollback(spark, leaf, stem, runId, Some(dataDir))
           Some(LeafResult(leaf, stem, success = false, 0L, 0, Some(e.toString)))
       }
     } finally { src.unpersist(); () }
@@ -1361,15 +1258,10 @@ object ManifestCommit {
           )
       }
       val seq = st.seq + 1L
-      val json =
-        s"""{"runId":"$runId","stem":"$stem","rows":$rows,"seq":$seq,"drows":$drows,""" +
-          (if (mutates) """"mut":1,""" else "") +
-          s""""inputs":${jsonArray(inputsRel)},"outputs":${jsonArray(outputsRel)},""" +
-          s""""deletes":${jsonArray(deletesRel)},""" +
-          sealMark
-      val out = fs.create(manifestPath, false)
-      try out.write(json.getBytes(StandardCharsets.UTF_8))
-      finally out.close()
+      MetaCodec.write(
+        fs, manifestPath,
+        MetaCodec.encodeManifest(Manifest(inputsRel, outputsRel, seq, runId, stem, rows, deletesRel, drows, mutates)),
+      )
 
       // Cumulative state for the new head. Superseded entries whose files
       // are no longer on disk do nothing (the subtraction from a listing is
@@ -1436,25 +1328,11 @@ object ManifestCommit {
       deletes: Seq[String] = Seq.empty,
   )
 
-  private[compact] def readHead(fs: FileSystem, p: Path): Option[HeadState] = {
-    val text =
-      try {
-        val in = fs.open(p)
-        try new String(in.readAllBytes(), StandardCharsets.UTF_8)
-        finally in.close()
-      } catch { case _: Throwable => return None }
-    if (!text.endsWith(sealMark)) return None // torn upload — never a committed stamp
-    for {
-      cov <- parseArr(text, "covered")
-      sup <- parseArr(text, "superseded")
-      outs <- parseArr(text, "outputs")
-    } yield HeadState(
-      parseNum(text, "seq"), sup.toSet, outs, cov.toSet, parseStr(text, "runId"),
-      // absent on pre-MoR heads — which predate every delete commit, so
-      // the empty default is exact, not a guess
-      parseArr(text, "deletes").getOrElse(Seq.empty),
-    )
-  }
+  /** A head whose `deletes` is absent predates every delete commit, so
+    * the empty default is exact. A torn upload is never a committed stamp.
+    */
+  private[compact] def readHead(fs: FileSystem, p: Path): Option[HeadState] =
+    MetaCodec.read(fs, p).flatMap(MetaCodec.decodeHead)
 
   /** Create the head for `seq` with overwrite=false — the collision
     * tripwire. A sealed head already holding this seq from ANOTHER runId
@@ -1479,15 +1357,8 @@ object ManifestCommit {
       deletes: Seq[String] = Seq.empty,
   ): Unit = {
     val p = new Path(s"$leaf/${headName(seq)}")
-    val json =
-      s"""{"seq":$seq,"runId":"$runId","covered":${jsonArray(covered)},""" +
-        s""""superseded":${jsonArray(superseded)},"outputs":${jsonArray(outputs)},""" +
-        s""""deletes":${jsonArray(deletes)},""" +
-        sealMark
     try {
-      val out = fs.create(p, false)
-      try out.write(json.getBytes(StandardCharsets.UTF_8))
-      finally out.close()
+      MetaCodec.write(fs, p, MetaCodec.encodeHead(seq, runId, covered, superseded, outputs, deletes))
       priorHeads.foreach { h =>
         if (headSeqOf(h.getName).exists(_ < seq)) {
           try fs.delete(h, false)
@@ -1595,33 +1466,8 @@ object ManifestCommit {
     * never carries the trailing seal mark, and any parse failure is
     * treated as "this manifest does not exist").
     */
-  private[compact] def readManifest(fs: FileSystem, p: Path): Option[Manifest] = {
-    val text =
-      try {
-        val in = fs.open(p)
-        try new String(in.readAllBytes(), StandardCharsets.UTF_8)
-        finally in.close()
-      } catch { case _: Throwable => return None }
-    if (!text.endsWith(sealMark)) return None
-    for (ins <- parseArr(text, "inputs"); outs <- parseArr(text, "outputs"))
-      yield Manifest(
-        ins, outs, parseNum(text, "seq"), parseStr(text, "runId"), parseStr(text, "stem"),
-        parseNum(text, "rows"), parseArr(text, "deletes").getOrElse(Seq.empty), parseNum(text, "drows"),
-        parseNum(text, "mut") == 1L,
-      )
-  }
-
-  // Regex field extraction over the restricted JSON this module writes
-  // (jsonArray rejects every character that would break these parses).
-  private def parseArr(text: String, field: String): Option[Seq[String]] =
-    s""""$field":\\[([^\\]]*)\\]""".r.findFirstMatchIn(text).map(_.group(1)).map { body =>
-      if (body.trim.isEmpty) Seq.empty
-      else body.split(',').toSeq.map(_.trim.stripPrefix("\"").stripSuffix("\""))
-    }
-  private def parseNum(text: String, field: String): Long =
-    s""""$field":(\\d+)""".r.findFirstMatchIn(text).map(_.group(1).toLong).getOrElse(0L)
-  private def parseStr(text: String, field: String): String =
-    s""""$field":"([^"]*)"""".r.findFirstMatchIn(text).map(_.group(1)).getOrElse("")
+  private[compact] def readManifest(fs: FileSystem, p: Path): Option[Manifest] =
+    MetaCodec.read(fs, p).flatMap(MetaCodec.decodeManifest)
 
   /** All sealed manifests of a leaf (unordered). */
   private[compact] def sealedManifests(fs: FileSystem, leaf: String): Seq[Manifest] =
@@ -2446,14 +2292,11 @@ object ManifestCommit {
     val last = folded.last._2
     val runId = UUID.randomUUID().toString.replace("-", "")
     val ckptName = s"_manifest-checkpoint-$runId.json"
-    val json =
-      s"""{"runId":"$runId","stem":"checkpoint","rows":${last.rows},"seq":${last.seq},""" +
-        s""""inputs":${jsonArray(allInputs)},"outputs":${jsonArray(netOutputs)},""" +
-        s""""deletes":${jsonArray(netDeletes)},""" +
-        sealMark
-    val out = fs.create(new Path(s"$leaf/$ckptName"), false)
-    try out.write(json.getBytes(StandardCharsets.UTF_8))
-    finally out.close()
+    MetaCodec.write(
+      fs, new Path(s"$leaf/$ckptName"),
+      MetaCodec.encodeManifest(
+        Manifest(allInputs, netOutputs, last.seq, runId, "checkpoint", last.rows, netDeletes), checkpoint = true),
+    )
 
     // Fold the folded commits' SIDECARS too (ROADMAP 42): merge their
     // entries for files the checkpoint still carries into one
@@ -2584,17 +2427,5 @@ object ManifestCommit {
     val pfx = if (leaf.endsWith("/")) leaf else leaf + "/"
     require(path.startsWith(pfx), s"input $path is not under leaf $leaf")
     path.stripPrefix(pfx)
-  }
-
-  private def jsonArray(xs: Seq[String]): String = {
-    // '"'/'\\' would need escaping; ']'/',' would break the regex-based
-    // array parse in readManifest (truncated or mis-split lists — a
-    // WRONG live set, far worse than a refused commit). Reject all four:
-    // the format stays bijective for every name it accepts, and real
-    // lake file names never contain them.
-    xs.foreach(x =>
-      require(!x.exists(c => c == '"' || c == '\\' || c == ']' || c == ','), s"unencodable file name: $x"),
-    )
-    xs.map("\"" + _ + "\"").mkString("[", ",", "]")
   }
 }

@@ -1,7 +1,5 @@
 package graft.compact
 
-import java.nio.charset.StandardCharsets
-
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
@@ -36,8 +34,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * a dropped file can never match).
   */
 object ManifestStats {
-
-  private val sealMark = "\"sealed\":true}"
 
   /** One column's recorded metadata: a (min, max) interval over the
     * NON-NULL values plus the column's null count (−1 when any row
@@ -134,35 +130,33 @@ object ManifestStats {
     case _ => None
   }
 
-  /** Seal the sidecar for one commit. Formats doubles via
-    * `Double.toString` (round-trip exact); same restricted-name rule as
-    * the manifest writer.
+  /** Collect and seal the stats and bloom sidecars `cfg` asks for over
+    * the files a commit adds (relative name, absolute path). Every
+    * commit path calls this BEFORE its commit point: the sidecars are
+    * debris until the manifest seals. A bloom is sized to the per-file
+    * row cap: bloomBitsPerItem=16 holds a 50-key batch probe's
+    * compounded fpp at ≈2% (StatsBench bits-ladder + fpp50); an
+    * oversized bloom costs every future reader its sidecar bytes.
     */
-  private[compact] def write(fs: FileSystem, leaf: String, runId: String, stats: Stats): Unit = {
-    stats.foreach { case (f, fst) =>
-      require(!f.exists(c => c == '"' || c == '\\'), s"unencodable file name: $f")
-      fst.cols.keys.foreach(k =>
-        require(
-          !k.exists(c => c == '"' || c == '\\' || c == ';' || c == '[' || c == ']' || c == '|' || c == ':'),
-          s"unencodable column name: $k",
-        ),
-      )
-    }
-    // the "c" string is quote-free (col:[lo;hi]|col:[lo;hi]) so the
-    // sidecar parses with the same regex discipline as the manifests
-    val body = stats.toSeq.sortBy(_._1).map { case (f, fst) =>
-      val cs = fst.cols.toSeq.sortBy(_._1)
-        .map { case (c, st) => s"$c:[${st.lo};${st.hi};${st.nulls}]" }.mkString("|")
-      s"""{"f":"$f","r":${fst.rows},"c":"$cs"}"""
-    }.mkString("[", ",", "]")
-    val json = s"""{"runId":"$runId","files":$body,""" + sealMark
-    val out = fs.create(new Path(s"$leaf/${statsName(runId)}"), false)
-    try out.write(json.getBytes(StandardCharsets.UTF_8))
-    finally out.close()
+  private[compact] def writeSidecars(
+      spark: SparkSession,
+      fs: FileSystem,
+      leaf: String,
+      runId: String,
+      files: Seq[(String, String)],
+      cfg: CompactorConfig,
+  ): Unit = if (files.nonEmpty) {
+    val st: Stats = if (cfg.statsColumns.isEmpty) Map.empty else collect(spark, files, cfg.statsColumns)
+    if (st.nonEmpty) write(fs, leaf, runId, st)
+    val bl: Map[String, Map[String, Array[Byte]]] =
+      if (cfg.bloomColumns.isEmpty) Map.empty
+      else collectBlooms(spark, files, cfg.bloomColumns, cfg.maxRowsPerFile, cfg.bloomBitsPerItem.toLong * cfg.maxRowsPerFile)
+    if (bl.nonEmpty) writeBlooms(fs, leaf, runId, bl)
   }
 
-  private val fileEntryRe = """\{"f":"([^"]+)","r":(\d+),"c":"([^"]*)"\}""".r
-  private val colEntryRe = """([^:|\[]+):\[([^;]+);([^;]+);(-?\d+)\]""".r
+  /** Seal the sidecar for one commit ([[MetaCodec.encodeStats]]). */
+  private[compact] def write(fs: FileSystem, leaf: String, runId: String, stats: Stats): Unit =
+    MetaCodec.write(fs, new Path(s"$leaf/${statsName(runId)}"), MetaCodec.encodeStats(runId, stats))
 
   /** Union of every sealed stats sidecar of a leaf. Files are
     * write-once under manifest semantics, so a name can only appear in
@@ -178,18 +172,8 @@ object ManifestStats {
   }
 
   /** Parse one sealed stats sidecar; empty on torn/unreadable. */
-  private[compact] def parseStatsFile(fs: FileSystem, p: Path): Seq[(String, FileStat)] = {
-    val text = readText(fs, p)
-    if (!text.endsWith(sealMark)) Seq.empty
-    else fileEntryRe.findAllMatchIn(text).flatMap { m =>
-      val cols = colEntryRe.findAllMatchIn(m.group(3)).flatMap { cm =>
-        try Some(cm.group(1) -> ColStat(cm.group(2).toDouble, cm.group(3).toDouble, cm.group(4).toLong))
-        catch { case _: NumberFormatException => None }
-      }.toMap
-      try Some(m.group(1) -> FileStat(m.group(2).toLong, cols))
-      catch { case _: NumberFormatException => None }
-    }.toSeq
-  }
+  private[compact] def parseStatsFile(fs: FileSystem, p: Path): Seq[(String, FileStat)] =
+    MetaCodec.read(fs, p).map(MetaCodec.decodeStats).getOrElse(Seq.empty)
 
   /** Best-effort removal of a commit's stats AND bloom sidecars — the
     * shared lifecycle step of every rollback/expire path (a failed
@@ -200,13 +184,6 @@ object ManifestStats {
       try { fs.delete(new Path(s"$leaf/$n"), false); () }
       catch { case _: Throwable => () }
     }
-
-  private def readText(fs: FileSystem, p: Path): String =
-    try {
-      val in = fs.open(p)
-      try new String(in.readAllBytes(), StandardCharsets.UTF_8)
-      finally in.close()
-    } catch { case _: Throwable => "" } // unreadable sidecar: skip it
 
   /** The files of `live` (absolute paths under `leaf`) that can hold a
     * `col` value in [lo, hi]: recorded interval intersects, or no
@@ -351,30 +328,14 @@ object ManifestStats {
       .toMap
   }
 
-  /** Seal the bloom sidecar (base64 payloads are regex-safe). */
+  /** Seal the bloom sidecar ([[MetaCodec.encodeBlooms]]). */
   private[compact] def writeBlooms(
       fs: FileSystem,
       leaf: String,
       runId: String,
       blooms: Map[String, Map[String, Array[Byte]]],
-  ): Unit = {
-    blooms.foreach { case (f, cols) =>
-      require(!f.exists(ch => ch == '"' || ch == '\\'), s"unencodable file name: $f")
-      cols.keys.foreach(k => require(!k.exists(ch => ch == '"' || ch == '\\'), s"unencodable column name: $k"))
-    }
-    val enc = java.util.Base64.getEncoder
-    val body = blooms.toSeq.sortBy(_._1).flatMap { case (f, cols) =>
-      cols.toSeq.sortBy(_._1).map { case (col, bytes) =>
-        s"""{"f":"$f","col":"$col","b":"${enc.encodeToString(bytes)}"}"""
-      }
-    }.mkString("[", ",", "]")
-    val json = s"""{"runId":"$runId","blooms":$body,""" + sealMark
-    val out = fs.create(new Path(s"$leaf/${bloomName(runId)}"), false)
-    try out.write(json.getBytes(StandardCharsets.UTF_8))
-    finally out.close()
-  }
-
-  private val bloomEntryRe = """\{"f":"([^"]+)","col":"([^"]+)","b":"([A-Za-z0-9+/=]*)"\}""".r
+  ): Unit =
+    MetaCodec.write(fs, new Path(s"$leaf/${bloomName(runId)}"), MetaCodec.encodeBlooms(runId, blooms))
 
   /** Union of every sealed bloom sidecar of a leaf. */
   def readBlooms(fs: FileSystem, leaf: String): Map[String, Map[String, Array[Byte]]] = {
@@ -388,15 +349,8 @@ object ManifestStats {
   }
 
   /** Parse one sealed bloom sidecar; empty on torn/unreadable. */
-  private[compact] def parseBloomFile(fs: FileSystem, p: Path): Seq[(String, String, Array[Byte])] = {
-    val dec = java.util.Base64.getDecoder
-    val text = readText(fs, p)
-    if (!text.endsWith(sealMark)) Seq.empty
-    else bloomEntryRe.findAllMatchIn(text).flatMap { m =>
-      try Some((m.group(1), m.group(2), dec.decode(m.group(3))))
-      catch { case _: IllegalArgumentException => None }
-    }.toSeq
-  }
+  private[compact] def parseBloomFile(fs: FileSystem, p: Path): Seq[(String, String, Array[Byte])] =
+    MetaCodec.read(fs, p).map(MetaCodec.decodeBlooms).getOrElse(Seq.empty)
 
   /** Point read over a manifest-committed leaf: drop live files whose
     * bloom for `col` definitely excludes `value` (no recorded bloom →

@@ -135,18 +135,6 @@ object MaterializedAgg {
     df.groupBy(keys.map(col): _*).agg(aggs.head, aggs.tail: _*)
   }
 
-  /** One aggregation pass over `files` (empty-safe). */
-  private def aggOf(
-      spark: SparkSession,
-      files: Seq[String],
-      keys: Seq[String],
-      values: Seq[String],
-      sumSq: Seq[String],
-      sumSqWide: Boolean,
-  ): Option[DataFrame] =
-    if (files.isEmpty) None
-    else Some(aggOfDf(spark.read.option("mergeSchema", "true").parquet(files: _*), keys, values, sumSq, sumSqWide))
-
   /** Read `files` with the source path attached per row (`_file`, from
     * the `_metadata` hidden column — resolved at the scan, no UDF).
     * Inert for the cnt/sum pass (aggOfDf groups by keys only); the

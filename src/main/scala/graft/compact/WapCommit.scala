@@ -206,18 +206,7 @@ object WapCommit {
       // Sidecars BEFORE the commit point, exactly like mergeAndCommit:
       // a crash here strands debris, never a sidecar-less live file
       // (sidecars are optional for readers anyway).
-      if (cfg.statsColumns.nonEmpty) {
-        val st = ManifestStats.collect(spark, outputsRel.zip(staged.map(_.toString)), cfg.statsColumns)
-        if (st.nonEmpty) ManifestStats.write(fs, leaf, runId, st)
-      }
-      if (cfg.bloomColumns.nonEmpty) {
-        val bl = ManifestStats.collectBlooms(
-          spark, outputsRel.zip(staged.map(_.toString)), cfg.bloomColumns,
-          expectedItems = cfg.maxRowsPerFile,
-          numBits = cfg.bloomBitsPerItem.toLong * cfg.maxRowsPerFile,
-        )
-        if (bl.nonEmpty) ManifestStats.writeBlooms(fs, leaf, runId, bl)
-      }
+      ManifestStats.writeSidecars(spark, fs, leaf, runId, outputsRel.zip(staged.map(_.toString)), cfg)
       ManifestCommit.publish(
         fs, leaf, stem = "wap", runId = runId,
         inputsRel = Seq.empty, outputsRel = outputsRel,

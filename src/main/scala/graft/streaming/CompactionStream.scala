@@ -1,7 +1,7 @@
 package graft.streaming
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
@@ -143,53 +143,6 @@ object CompactionStream {
   }
 
   private[streaming] val scheduleFileName = "graft-due-schedule"
-
-  /** Read a persisted due schedule: `dueMs<TAB>leaf` lines. Missing file
-    * → empty; a corrupt line or read failure drops the snapshot (logged)
-    * rather than failing the stream — `catchUpOnStart` covers the loss.
-    */
-  private[streaming] def loadSchedule(fs: FileSystem, file: Path): Map[String, Long] =
-    try {
-      if (!fs.exists(file)) Map.empty
-      else {
-        val in = fs.open(file)
-        try scala.io.Source.fromInputStream(in, "UTF-8").getLines().flatMap { line =>
-          val i = line.indexOf('\t')
-          if (i <= 0) None else Some(line.substring(i + 1) -> line.substring(0, i).toLong)
-        }.toMap
-        finally in.close()
-      }
-    } catch {
-      case e: Throwable =>
-        System.err.println(s"[compact-stream] could not load due schedule $file (${e.toString}); starting empty")
-        Map.empty
-    }
-
-  /** Atomically (tmp + rename) snapshot the due schedule next to the
-    * checkpoint. Best-effort: a failure logs and the stream continues —
-    * the schedule is an optimization over `catchUpOnStart`, never the
-    * source of truth for correctness (planning re-derives eligibility).
-    */
-  private[streaming] def persistSchedule(fs: FileSystem, file: Path, entries: Map[String, Long]): Unit =
-    try {
-      val tmp = new Path(file.getParent, s".${file.getName}.tmp")
-      val out = fs.create(tmp, true)
-      try {
-        val w = new java.io.BufferedWriter(new java.io.OutputStreamWriter(out, java.nio.charset.StandardCharsets.UTF_8))
-        entries.toSeq.sorted.foreach { case (leaf, ms) => w.write(s"$ms\t$leaf\n") }
-        w.flush()
-      } finally out.close()
-      // local FS rename won't overwrite: drop the old snapshot first. A
-      // crash in the gap loses one snapshot generation, which the next
-      // changed batch rewrites.
-      fs.delete(file, false)
-      if (!fs.rename(tmp, file)) {
-        System.err.println(s"[compact-stream] could not publish due schedule $file (rename failed)")
-      }
-    } catch {
-      case e: Throwable =>
-        System.err.println(s"[compact-stream] could not persist due schedule $file (${e.toString})")
-    }
 
   /** Fresh listing of exactly these leaf dirs, one task per leaf —
     * micro-batch rows are file *events*; planning needs current truth.

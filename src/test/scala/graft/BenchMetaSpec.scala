@@ -109,4 +109,17 @@ class BenchMetaSpec extends AnyFunSuite with Matchers {
     names.foreach(n => withClue(n) { tree.get(n).asDouble() shouldBe (names.indexOf(n) + 1.0) })
     tree.get("nan_q").isNull shouldBe true
   }
+
+  test("readDetailMins keeps a query whose passes hold a null, and skips _-prefixed keys and all-null queries") {
+    val mins = Bench.readDetailMins(tmp(
+      """{
+        |  "q1": [1.5, null, 1.2],
+        |  "q2": [null, null],
+        |  "q_3": [2],
+        |  "_meta": {"unit": "sec", "passes": 2},
+        |  "_layers": [0.5]
+        |}""".stripMargin))
+    mins shouldBe Map("q1" -> 1.2, "q_3" -> 2.0)
+    Bench.readDetailMins(java.nio.file.Paths.get("/nonexistent/graft-detail.json")) shouldBe Map.empty
+  }
 }

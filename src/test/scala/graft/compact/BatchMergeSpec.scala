@@ -206,10 +206,10 @@ class BatchMergeSpec extends AnyFunSuite with Matchers with SparkSpec with Befor
         jobs.filter(_.description.startsWith("Listing leaf files")) shouldBe empty
         // schema inference is the one job outside a SQL execution
         jobs.filterNot(_.sqlExecution) shouldBe empty
-        // the gid table's broadcast, the staged write's shuffle map stage
-        // and its write job. A solo fallback of any plan (e.g. a gid join
-        // miss on the escaped path) would add that plan's own write job.
-        jobs.size shouldBe 3
+        // the staged write's shuffle map stage and its write job. A solo
+        // fallback of any plan (e.g. a gid lookup miss on the escaped
+        // path) would add that plan's own write job.
+        jobs.size shouldBe 2
       }
       plans.zip(before).foreach { case (p, bag) =>
         val names = new File(p.leaf).listFiles().map(_.getName).filter(_.endsWith(".parquet")).toSeq
@@ -244,6 +244,22 @@ class BatchMergeSpec extends AnyFunSuite with Matchers with SparkSpec with Befor
     } finally {
       def rm(f: File): Unit = { if (f.isDirectory) f.listFiles().foreach(rm); f.delete(); () }
       rm(sroot)
+    }
+  }
+
+  test("the gid lookup drops rows of a file missing from its map, so no plan's stage can hold them") {
+    val groot = Files.createTempDirectory("graft-gid-miss").toFile
+    try {
+      val leaf = new File(groot, "leaf"); leaf.mkdirs()
+      writeFile(leaf, "in.parquet", df("in", 3))
+      writeFile(leaf, "out.parquet", df("out", 4))
+      val scan = spark.read.parquet(leaf.getAbsolutePath)
+      val inPath = scan.inputFiles.find(_.endsWith("in.parquet")).get
+      val tagged = BatchMerger.withGid(scan, Map(inPath -> 7), "g")
+      tagged.collect().map(r => (r.getAs[String]("tag"), r.getAs[Int]("g"))).toSeq shouldBe Seq.fill(3)(("in", 7))
+    } finally {
+      def rm(f: File): Unit = { if (f.isDirectory) f.listFiles().foreach(rm); f.delete(); () }
+      rm(groot)
     }
   }
 }

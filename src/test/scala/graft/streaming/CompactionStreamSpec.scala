@@ -387,7 +387,7 @@ class CompactionStreamSpec extends AnyFunSuite with Matchers with SparkSpec with
       } finally q1.stop()
       val schedPath = new org.apache.hadoop.fs.Path(schedFile.getAbsolutePath)
       val schedFs = schedPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val persisted = CompactionStream.loadSchedule(schedFs, schedPath)
+      val persisted = ScheduleFile.read(schedFs, schedPath)
       withClue(persisted) {
         persisted.keySet.exists(_.contains("source=sched")) shouldBe true
       }
@@ -397,7 +397,7 @@ class CompactionStreamSpec extends AnyFunSuite with Matchers with SparkSpec with
       // the planner's clock (asOf) moves past the files' freshness window.
       // Rewrite through the same FileSystem so the checksum sibling stays
       // consistent — a raw edit would fail the reload with ChecksumException.
-      CompactionStream.persistSchedule(schedFs, schedPath, persisted.map { case (k, _) => k -> 0L })
+      ScheduleFile.write(schedFs, schedPath, persisted.map { case (k, _) => k -> 0L })
       val laterCfg = movingCfg.copy(
         asOf = Some(LocalDate.now(java.time.ZoneOffset.UTC).plusDays(2)),
       )

@@ -37,7 +37,7 @@ class DueScheduleSpec extends AnyFunSuite with Matchers {
       s.residentCount shouldBe 3
       s.spilledCount shouldBe 7
       // the resident window is the SOONEST three
-      CompactionStream.loadSchedule(fs, p).size shouldBe 10
+      ScheduleFile.read(fs, p).size shouldBe 10
     }
   }
 
@@ -50,7 +50,7 @@ class DueScheduleSpec extends AnyFunSuite with Matchers {
       while (batch.nonEmpty) { got ++= batch; batch = s.takeReady(100L, 3) }
       got.toSeq shouldBe (1 to 7).map(i => s"file:/leaf$i")
       s.flush()
-      CompactionStream.loadSchedule(fs, p) shouldBe Map.empty
+      ScheduleFile.read(fs, p) shouldBe Map.empty
     }
   }
 
@@ -62,7 +62,7 @@ class DueScheduleSpec extends AnyFunSuite with Matchers {
       s.book("file:/c", 500L) // spills (latest-due of the three)
       s.takeReady(nowMs = 100L, max = 10) shouldBe Seq("file:/a", "file:/b")
       s.flush()
-      CompactionStream.loadSchedule(fs, p) shouldBe Map("file:/c" -> 500L)
+      ScheduleFile.read(fs, p) shouldBe Map("file:/c" -> 500L)
       s.takeReady(nowMs = 1000L, max = 10) shouldBe Seq("file:/c")
     }
   }
@@ -75,12 +75,12 @@ class DueScheduleSpec extends AnyFunSuite with Matchers {
       s.book("file:/a", 5L) // resident, older booking loses
       s.book("file:/b", 120L) // pending booking grows
       s.flush()
-      CompactionStream.loadSchedule(fs, p) shouldBe Map("file:/a" -> 10L, "file:/b" -> 120L)
+      ScheduleFile.read(fs, p) shouldBe Map("file:/a" -> 10L, "file:/b" -> 120L)
       // a booking for a leaf already spilled to DISK max-merges on rewrite
       s.book("file:/b", 80L) // below the on-disk 120
       s.book("file:/c", 1L) // soonest — takes the single resident slot
       s.flush()
-      CompactionStream.loadSchedule(fs, p) shouldBe
+      ScheduleFile.read(fs, p) shouldBe
         Map("file:/a" -> 10L, "file:/b" -> 120L, "file:/c" -> 1L)
     }
   }
@@ -106,7 +106,7 @@ class DueScheduleSpec extends AnyFunSuite with Matchers {
       s.book("file:/a", 10L)
       s.book("file:/b", 500L) // spills
       s.flush()
-      CompactionStream.loadSchedule(fs, p) shouldBe Map("file:/a" -> 10L, "file:/b" -> 500L)
+      ScheduleFile.read(fs, p) shouldBe Map("file:/a" -> 10L, "file:/b" -> 500L)
       // a new arrival books b EARLIER than its on-disk 500 (already-due
       // time); serving that copy must not delete the 500 booking — the
       // mtime-window source never re-emits, so dropping it would strand
@@ -114,10 +114,10 @@ class DueScheduleSpec extends AnyFunSuite with Matchers {
       s.book("file:/b", 5L)
       s.takeReady(nowMs = 100L, max = 1) shouldBe Seq("file:/b")
       s.flush()
-      CompactionStream.loadSchedule(fs, p) shouldBe Map("file:/a" -> 10L, "file:/b" -> 500L)
+      ScheduleFile.read(fs, p) shouldBe Map("file:/a" -> 10L, "file:/b" -> 500L)
       s.takeReady(nowMs = 1000L, max = 10).toSet shouldBe Set("file:/a", "file:/b")
       s.flush()
-      CompactionStream.loadSchedule(fs, p) shouldBe Map.empty
+      ScheduleFile.read(fs, p) shouldBe Map.empty
     }
   }
 
@@ -131,12 +131,12 @@ class DueScheduleSpec extends AnyFunSuite with Matchers {
       // that mid-batch rewrite must not persist either removal — a crash
       // before the post-processing flush() must re-book both on restart
       s.takeReady(nowMs = 100L, max = 10) shouldBe Seq("file:/a", "file:/b")
-      CompactionStream.loadSchedule(fs, p) shouldBe Map("file:/a" -> 10L, "file:/b" -> 20L)
+      ScheduleFile.read(fs, p) shouldBe Map("file:/a" -> 10L, "file:/b" -> 20L)
       val crashed = new DueSchedule(fs, p, cap = 1)
       crashed.takeReady(nowMs = 100L, max = 10).toSet shouldBe Set("file:/a", "file:/b")
       // no crash: the post-batch flush is what finally drops them
       s.flush()
-      CompactionStream.loadSchedule(fs, p) shouldBe Map.empty
+      ScheduleFile.read(fs, p) shouldBe Map.empty
     }
   }
 
@@ -197,7 +197,7 @@ class DueScheduleSpec extends AnyFunSuite with Matchers {
         }
         withClue(s"round $round (cap $cap): ") {
           served.toSet shouldBe minBook.keySet
-          CompactionStream.loadSchedule(fs, p) shouldBe Map.empty
+          ScheduleFile.read(fs, p) shouldBe Map.empty
         }
       }
     }
@@ -285,7 +285,7 @@ class DueScheduleSpec extends AnyFunSuite with Matchers {
         }
         withClue(s"round $round (cap $cap): ") {
           served.toSet shouldBe minBook.keySet
-          CompactionStream.loadSchedule(fs, p) shouldBe Map.empty
+          ScheduleFile.read(fs, p) shouldBe Map.empty
         }
       } finally {
         def rm(x: java.io.File): Unit = { if (x.isDirectory) x.listFiles().foreach(rm); x.delete(); () }

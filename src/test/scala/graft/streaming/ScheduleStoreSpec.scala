@@ -7,11 +7,12 @@ import org.apache.hadoop.fs.{FileSystem, Path, RawLocalFileSystem}
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
 
-/** Unit semantics of the persisted due schedule (no Spark session):
-  * round-trip fidelity, the two corruption behaviors, overwrite via
-  * delete+rename, and the best-effort no-throw contract on a failing
-  * FileSystem — the schedule is an optimization over catchUpOnStart,
-  * so persistence failures must never take the stream down.
+/** The persisted due-schedule format as [[DueSchedule]] writes and
+  * restores it (no Spark session): round-trip fidelity, the two
+  * corruption behaviors, a rewrite replacing the old snapshot, and the
+  * best-effort no-throw contract on a failing FileSystem — the schedule
+  * is an optimization over catchUpOnStart, so persistence failures must
+  * never take the stream down.
   */
 class ScheduleStoreSpec extends AnyFunSuite with Matchers {
 
@@ -26,42 +27,66 @@ class ScheduleStoreSpec extends AnyFunSuite with Matchers {
     }
   }
 
+  private def writeRaw(fs: FileSystem, p: Path, text: String): Unit = {
+    val out = fs.create(p, true)
+    out.write(text.getBytes("UTF-8"))
+    out.close()
+  }
+
   test("round-trip: persist then load returns the same map") {
     withFs { (fs, p) =>
       val entries = Map("file:/a/leaf1" -> 1700000000000L, "file:/a/leaf2" -> 0L)
-      CompactionStream.persistSchedule(fs, p, entries)
-      CompactionStream.loadSchedule(fs, p) shouldBe entries
+      val s = new DueSchedule(fs, p, cap = 1)
+      entries.foreach { case (leaf, ms) => s.book(leaf, ms) }
+      s.flush()
+      ScheduleFile.read(fs, p) shouldBe entries
+      // a restart restores both entries with their due times
+      val restored = new DueSchedule(fs, p, cap = 1)
+      (restored.residentCount, restored.spilledCount) shouldBe ((1, 1))
+      restored.takeReady(nowMs = 0L, max = 10) shouldBe Seq("file:/a/leaf2")
+      restored.takeReady(nowMs = 1699999999999L, max = 10) shouldBe empty
+      restored.takeReady(nowMs = 1700000000000L, max = 10) shouldBe Seq("file:/a/leaf1")
     }
   }
 
   test("missing file loads as empty") {
-    withFs { (fs, p) => CompactionStream.loadSchedule(fs, p) shouldBe Map.empty }
+    withFs { (fs, p) =>
+      val s = new DueSchedule(fs, p, cap = 4)
+      (s.residentCount, s.spilledCount) shouldBe ((0, 0))
+      s.takeReady(Long.MaxValue, 10) shouldBe empty
+      s.flush() // nothing changed: no snapshot is written
+      fs.exists(p) shouldBe false
+    }
   }
 
   test("a line without a tab is skipped; the rest of the snapshot survives") {
     withFs { (fs, p) =>
-      val out = fs.create(p, true)
-      out.write("123\tfile:/a/leaf1\nnot-a-schedule-line\n456\tfile:/a/leaf2\n".getBytes("UTF-8"))
-      out.close()
-      CompactionStream.loadSchedule(fs, p) shouldBe
-        Map("file:/a/leaf1" -> 123L, "file:/a/leaf2" -> 456L)
+      writeRaw(fs, p, "123\tfile:/a/leaf1\nnot-a-schedule-line\n456\tfile:/a/leaf2\n")
+      val s = new DueSchedule(fs, p, cap = 4)
+      s.residentCount shouldBe 2
+      s.takeReady(nowMs = 1000L, max = 10) shouldBe Seq("file:/a/leaf1", "file:/a/leaf2")
     }
   }
 
   test("an unparseable due-ms drops the snapshot (logged), not the stream") {
     withFs { (fs, p) =>
-      val out = fs.create(p, true)
-      out.write("123\tfile:/a/leaf1\nnot-a-number\tfile:/a/leaf2\n".getBytes("UTF-8"))
-      out.close()
-      CompactionStream.loadSchedule(fs, p) shouldBe Map.empty
+      writeRaw(fs, p, "123\tfile:/a/leaf1\nnot-a-number\tfile:/a/leaf2\n")
+      val s = new DueSchedule(fs, p, cap = 4)
+      (s.residentCount, s.spilledCount) shouldBe ((0, 0))
+      s.takeReady(Long.MaxValue, 10) shouldBe empty
     }
   }
 
   test("persist overwrites a previous snapshot") {
     withFs { (fs, p) =>
-      CompactionStream.persistSchedule(fs, p, Map("file:/a/leaf1" -> 1L))
-      CompactionStream.persistSchedule(fs, p, Map("file:/a/leaf2" -> 2L))
-      CompactionStream.loadSchedule(fs, p) shouldBe Map("file:/a/leaf2" -> 2L)
+      val s = new DueSchedule(fs, p, cap = 4)
+      s.book("file:/a/leaf1", 1L)
+      s.flush()
+      s.takeReady(nowMs = 1L, max = 10) shouldBe Seq("file:/a/leaf1")
+      s.book("file:/a/leaf2", 2L)
+      s.flush()
+      ScheduleFile.read(fs, p) shouldBe Map("file:/a/leaf2" -> 2L)
+      fs.exists(new Path(p.getParent, s".${p.getName}.tmp")) shouldBe false
     }
   }
 
@@ -75,7 +100,9 @@ class ScheduleStoreSpec extends AnyFunSuite with Matchers {
       override def exists(p: Path): Boolean = true
     }
     val p = new Path("/tmp/graft-sched-never-written")
-    noException should be thrownBy CompactionStream.persistSchedule(broken, p, Map("x" -> 1L))
-    CompactionStream.loadSchedule(broken, p) shouldBe Map.empty
+    var s: DueSchedule = null
+    noException should be thrownBy { s = new DueSchedule(broken, p, cap = 2) }
+    (s.residentCount, s.spilledCount) shouldBe ((0, 0))
+    noException should be thrownBy { s.book("x", 1L); s.flush() }
   }
 }
