@@ -3,8 +3,6 @@ package graft.compact
 import java.util.UUID
 
 import org.apache.hadoop.fs.Path
-import org.apache.parquet.hadoop.ParquetFileReader
-import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -151,17 +149,11 @@ object BatchMerger {
     try {
       // a 0-row group writes no partitionBy dir at all — that's a valid
       // empty stage (validated as 0 rows below), not an error
-      val staged =
-        (try fs.listStatus(new Path(stagedDir))
-         catch { case _: java.io.FileNotFoundException => Array.empty[org.apache.hadoop.fs.FileStatus] })
-          .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-      var rowsStaged = 0L
-      val conf = spark.sparkContext.hadoopConfiguration
-      staged.foreach { f =>
-        val r = ParquetFileReader.open(HadoopInputFile.fromPath(f.getPath, conf))
-        try rowsStaged += r.getRecordCount
-        finally r.close()
-      }
+      val probed =
+        try KnownFiles.staged(spark, stagedDir)
+        catch { case _: java.io.FileNotFoundException => IndexedSeq.empty }
+      val staged = probed.map(_.status)
+      val rowsStaged = probed.map(_.rows).sum
       if (rowsStaged != p.rowsIn) {
         System.err.println(
           s"[compact] batch validation failed for ${p.plan.leaf}/${p.plan.stem} " +
@@ -251,7 +243,7 @@ object BatchMerger {
       spark: SparkSession,
       fs: org.apache.hadoop.fs.FileSystem,
       p: Probe,
-      staged: Array[org.apache.hadoop.fs.FileStatus],
+      staged: Seq[org.apache.hadoop.fs.FileStatus],
       rowsStaged: Long,
       cfg: CompactorConfig,
   ): LeafResult = {

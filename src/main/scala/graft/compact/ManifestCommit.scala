@@ -237,6 +237,16 @@ object ManifestCommit {
       }
     }
 
+  /** A row rewrite's staged files with rows in them (name-sorted), and
+    * the stage's row total. Its 0-row files, dead weight in the live
+    * set, are deleted.
+    */
+  private def nonEmptyStaged(spark: SparkSession, fs: FileSystem, dataDir: String): (Seq[Path], Long) = {
+    val staged = KnownFiles.staged(spark, dataDir)
+    staged.filter(_.rows == 0L).foreach(k => fs.delete(k.status.getPath, false))
+    (staged.filter(_.rows > 0L).map(_.status.getPath), staged.map(_.rows).sum)
+  }
+
   private def writeDeleteSidecar(
       spark: SparkSession,
       fs: FileSystem,
@@ -302,13 +312,9 @@ object ManifestCommit {
       }
       Merger.stageWrite(spark, df, dataDir, plan.totalBytes, rowsIn, cfg, runId)
 
-      val outFiles = fs
-        .listStatus(new Path(dataDir))
-        .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-        .map(_.getPath)
-        .sortBy(_.getName)
-        .toSeq
-      val rowsStaged = Merger.footerRows(spark, outFiles.map(_.toString))
+      val staged = KnownFiles.staged(spark, dataDir)
+      val outFiles = staged.map(_.status.getPath)
+      val rowsStaged = staged.map(_.rows).sum
       if (rowsStaged != rowsIn) {
         fs.delete(new Path(dataDir), true)
         return LeafResult(
@@ -473,7 +479,7 @@ object ManifestCommit {
     val runId = UUID.randomUUID().toString.replace("-", "")
     val dataDir = s"$leaf/.data-$runId"
     try {
-      val rowsIn = Merger.footerRows(spark, inputs) - fold.appliedRows
+      val rowsIn = KnownFiles.rows(spark, inputs) - fold.appliedRows
       // SQL DELETE semantics: only cond=TRUE rows go; a NULL-evaluating
       // row SURVIVES (a bare !cond would silently drop it — and the
       // rowsIn − matched validation below would catch exactly that).
@@ -486,20 +492,7 @@ object ManifestCommit {
       aware
         .where(!org.apache.spark.sql.functions.coalesce(cond, lit(false)))
         .write.mode("overwrite").parquet(dataDir)
-      // ONE footer open per staged file feeds both the 0-row filter (a
-      // 0-row survivor file is dead weight) and the validation sum
-      val conf = spark.sparkContext.hadoopConfiguration
-      val stagedRows: Seq[(Path, Long)] = fs.listStatus(new Path(dataDir))
-        .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-        .map(_.getPath).sortBy(_.getName).toSeq
-        .map { p =>
-          val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-            org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p, conf))
-          try p -> r.getRecordCount finally r.close()
-        }
-      val outFiles = stagedRows.collect { case (p, n) if n > 0L => p }
-      stagedRows.collect { case (p, n) if n == 0L => p }.foreach(p => fs.delete(p, false))
-      val rowsStaged = stagedRows.map(_._2).sum
+      val (outFiles, rowsStaged) = nonEmptyStaged(spark, fs, dataDir)
       if (rowsStaged != rowsIn - matched) {
         fs.delete(new Path(dataDir), true)
         return Some(LeafResult(
@@ -607,7 +600,7 @@ object ManifestCommit {
     val runId = UUID.randomUUID().toString.replace("-", "")
     val dataDir = s"$leaf/.data-$runId"
     try {
-      val rowsIn = Merger.footerRows(spark, inputs) - fold.appliedRows
+      val rowsIn = KnownFiles.rows(spark, inputs) - fold.appliedRows
       val aware = fold.applied match {
         case None => spark.read.option("mergeSchema", "true").parquet(inputs: _*)
         case Some(applied) => antiJoinPositions(readWithPos(spark, leaf, inputs), applied)
@@ -625,18 +618,7 @@ object ManifestCommit {
         .option("compression", "snappy")
         .option("maxRecordsPerFile", cfg.maxRowsPerFile)
         .mode("overwrite").parquet(dataDir)
-      val conf = spark.sparkContext.hadoopConfiguration
-      val stagedRows: Seq[(Path, Long)] = fs.listStatus(new Path(dataDir))
-        .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-        .map(_.getPath).sortBy(_.getName).toSeq
-        .map { p =>
-          val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-            org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p, conf))
-          try p -> r.getRecordCount finally r.close()
-        }
-      val outFiles = stagedRows.collect { case (p, n) if n > 0L => p }
-      stagedRows.collect { case (p, n) if n == 0L => p }.foreach(p => fs.delete(p, false))
-      val rowsStaged = stagedRows.map(_._2).sum
+      val (outFiles, rowsStaged) = nonEmptyStaged(spark, fs, dataDir)
       if (rowsStaged != rowsIn) {
         fs.delete(new Path(dataDir), true)
         return Some(LeafResult(
@@ -729,7 +711,7 @@ object ManifestCommit {
       val deletesRel = writeDeleteSidecar(spark, fs, leaf, runId, matchedPos)
       val drows =
         if (deletesRel.isEmpty) 0L
-        else Merger.footerRows(spark, deletesRel.map(r => s"$leaf/$r"))
+        else KnownFiles.rows(spark, deletesRel.map(r => s"$leaf/$r"))
       if (drows == 0L) {
         try { fs.delete(new Path(s"$leaf/.delete-$runId"), true); () } catch { case _: Throwable => () }
         return None
@@ -918,7 +900,7 @@ object ManifestCommit {
     try {
       val positions = deletePositions(spark, dels.map(r => s"$leaf/$r"))
       val deletesRel = writeDeleteSidecar(spark, fs, leaf, runId, positions)
-      val drows = Merger.footerRows(spark, deletesRel.map(r => s"$leaf/$r"))
+      val drows = KnownFiles.rows(spark, deletesRel.map(r => s"$leaf/$r"))
       publish(
         fs, leaf, stem, runId,
         inputsRel = dels, outputsRel = Seq.empty, rows = 0L, retries = cfg.commitRetries,
@@ -1065,7 +1047,7 @@ object ManifestCommit {
       val runId = UUID.randomUUID().toString.replace("-", "")
       val dataDir = s"$leaf/.data-$runId"
       try {
-        val rowsIn = (if (hit.isEmpty) 0L else Merger.footerRows(spark, hit)) - fold.appliedRows
+        val rowsIn = (if (hit.isEmpty) 0L else KnownFiles.rows(spark, hit)) - fold.appliedRows
         // survivors: hit rows (delete-aware) whose key has NO source
         // edition — plain-equality anti join, so NULL-key target rows
         // always survive; then the source appends whole
@@ -1105,18 +1087,7 @@ object ManifestCommit {
           .option("compression", "snappy")
           .option("maxRecordsPerFile", cfg.maxRowsPerFile)
           .mode("overwrite").parquet(dataDir)
-        val conf = spark.sparkContext.hadoopConfiguration
-        val stagedRows: Seq[(Path, Long)] = fs.listStatus(new Path(dataDir))
-          .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-          .map(_.getPath).sortBy(_.getName).toSeq
-          .map { p =>
-            val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-              org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p, conf))
-            try p -> r.getRecordCount finally r.close()
-          }
-        val outFiles = stagedRows.collect { case (p, n) if n > 0L => p }
-        stagedRows.collect { case (p, n) if n == 0L => p }.foreach(p => fs.delete(p, false))
-        val rowsStaged = stagedRows.map(_._2).sum
+        val (outFiles, rowsStaged) = nonEmptyStaged(spark, fs, dataDir)
         if (rowsStaged != rowsIn - matched + srcRows) {
           fs.delete(new Path(dataDir), true)
           return Some(LeafResult(
@@ -1305,6 +1276,7 @@ object ManifestCommit {
   // ---- snapshot-pointer head: _head-<seq>.json --------------------------
 
   private val headNameRe = "_head-(\\d+)\\.json".r
+  private val manifestRunIdRe = "_manifest-.*-([0-9a-f]+)\\.json".r
   private[compact] def headName(seq: Long): String = f"_head-$seq%09d.json"
   private[compact] def headSeqOf(name: String): Option[Long] = name match {
     case headNameRe(d) => Some(d.toLong)
@@ -2375,7 +2347,7 @@ object ManifestCommit {
       es.filter(e => e.isFile && e.getPath.getName.startsWith("_manifest-") && e.getPath.getName.endsWith(".json"))
     def runIdsOf(es: Array[org.apache.hadoop.fs.FileStatus]) = es
       .map(_.getPath.getName)
-      .flatMap(n => "_manifest-.*-([0-9a-f]+)\\.json".r.findFirstMatchIn(n).map(_.group(1)))
+      .flatMap(n => manifestRunIdRe.findFirstMatchIn(n).map(_.group(1)))
       .toSet
     val entries = fs.listStatus(leafPath)
     val referenced = manifestFiles(entries)

@@ -1,8 +1,6 @@
 package graft.compact
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.parquet.hadoop.ParquetFileReader
-import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** File-level column statistics for the manifest commit — the data-
@@ -59,7 +57,8 @@ object ManifestStats {
     case _               => None
   }
 
-  /** Read per-file column min/max from parquet FOOTERS (no data I/O):
+  /** Read per-file column min/max from parquet FOOTERS (no data I/O,
+    * on the driver's footer pool: [[KnownFiles.footers]]):
     * fold row-group statistics per column. A column missing from a
     * file, non-numeric, or lacking valid stats in ANY row group yields
     * no entry for that file — it will never be pruned on it.
@@ -69,44 +68,41 @@ object ManifestStats {
       files: Seq[(String, String)], // (relative name, absolute path)
       cols: Seq[String],
   ): Stats = {
-    val conf = spark.sparkContext.hadoopConfiguration
     val wanted = cols.map(c => c.toLowerCase -> c).toMap
-    files.flatMap { case (rel, abs) =>
-      val r = ParquetFileReader.open(HadoopInputFile.fromPath(new Path(abs), conf))
-      try {
-        val perCol = scala.collection.mutable.Map.empty[String, ColStat]
-        val invalid = scala.collection.mutable.Set.empty[String]
-        r.getFooter.getBlocks.forEach { blk =>
-          blk.getColumns.forEach { cc =>
-            val path = cc.getPath.toDotString
-            wanted.get(path.toLowerCase).foreach { col =>
-              val st = cc.getStatistics
-              val ok = st != null && !st.isEmpty && st.hasNonNullValue
-              val bounds =
-                if (ok) numericBounds(st.genericGetMin.asInstanceOf[AnyRef], st.genericGetMax.asInstanceOf[AnyRef])
-                else None
-              // null count: -1 propagates as "unknown" (isNumNullsSet
-              // false on any row group taints the file's total)
-              val rgNulls = if (st != null && st.isNumNullsSet) st.getNumNulls else -1L
-              bounds match {
-                case Some((lo, hi)) =>
-                  perCol(col) = perCol.get(col).fold(ColStat(lo, hi, rgNulls)) { c =>
-                    ColStat(
-                      math.min(c.lo, lo), math.max(c.hi, hi),
-                      if (c.nulls < 0 || rgNulls < 0) -1L else c.nulls + rgNulls,
-                    )
-                  }
-                case None => invalid += col; ()
-              }
+    val stats = KnownFiles.footers(spark, files.map(_._2)) { (_, r) =>
+      val perCol = scala.collection.mutable.Map.empty[String, ColStat]
+      val invalid = scala.collection.mutable.Set.empty[String]
+      r.getFooter.getBlocks.forEach { blk =>
+        blk.getColumns.forEach { cc =>
+          val path = cc.getPath.toDotString
+          wanted.get(path.toLowerCase).foreach { col =>
+            val st = cc.getStatistics
+            val ok = st != null && !st.isEmpty && st.hasNonNullValue
+            val bounds =
+              if (ok) numericBounds(st.genericGetMin.asInstanceOf[AnyRef], st.genericGetMax.asInstanceOf[AnyRef])
+              else None
+            // null count: -1 propagates as "unknown" (isNumNullsSet
+            // false on any row group taints the file's total)
+            val rgNulls = if (st != null && st.isNumNullsSet) st.getNumNulls else -1L
+            bounds match {
+              case Some((lo, hi)) =>
+                perCol(col) = perCol.get(col).fold(ColStat(lo, hi, rgNulls)) { c =>
+                  ColStat(
+                    math.min(c.lo, lo), math.max(c.hi, hi),
+                    if (c.nulls < 0 || rgNulls < 0) -1L else c.nulls + rgNulls,
+                  )
+                }
+              case None => invalid += col; ()
             }
           }
         }
-        invalid.foreach(perCol.remove)
-        // rows are known even when no column qualified: the entry still
-        // serves metadata-only counts ([[countLeaf]])
-        Some(rel -> FileStat(r.getRecordCount, perCol.toMap))
-      } finally r.close()
-    }.toMap
+      }
+      invalid.foreach(perCol.remove)
+      // rows are known even when no column qualified: the entry still
+      // serves metadata-only counts ([[countLeaf]])
+      FileStat(r.getRecordCount, perCol.toMap)
+    }
+    files.map(_._1).zip(stats).toMap
   }
 
   /** Typed min/max -> a double interval that CONTAINS the true one
@@ -476,7 +472,7 @@ object ManifestStats {
     val liveRel = live.map(ManifestCommit.relativeTo(leaf, _)).toSet
     val deleted = deletedPerFile(spark, leaf).collect { case (f, n) if liveRel(f) => n }.sum
     known.map(f => stats(ManifestCommit.relativeTo(leaf, f)).rows).sum +
-      (if (unknown.isEmpty) 0L else Merger.footerRows(spark, unknown)) - deleted
+      (if (unknown.isEmpty) 0L else KnownFiles.rows(spark, unknown)) - deleted
   }
 
   /** Conservative metadata-only bounds of `col` over the leaf: the

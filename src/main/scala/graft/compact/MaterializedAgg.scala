@@ -616,7 +616,7 @@ object MaterializedAgg {
       }
       val rest = needFooter.result()
       if (rest.forall(p => fs.exists(new Path(p)))) {
-        if (rest.nonEmpty) total += Merger.footerRows(spark, rest)
+        if (rest.nonEmpty) total += KnownFiles.rows(spark, rest)
         Some(total)
       } else None
     }

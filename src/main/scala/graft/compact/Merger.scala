@@ -32,12 +32,6 @@ import org.apache.spark.sql.SparkSession
   */
 object Merger {
 
-  /** Sum of row counts from parquet footers: metadata-only reads on a
-    * bounded driver pool ([[KnownFiles.probe]]), no Spark job.
-    */
-  private[compact] def footerRows(spark: SparkSession, files: Seq[String]): Long =
-    KnownFiles.probe(spark, files).map(_.rows).sum
-
   /** Output partitioning sized by bytes AND rows (shared by both commit
     * modes): the row cap splits files anyway, so giving each prospective
     * output file its own task costs nothing in file count and buys
@@ -126,7 +120,8 @@ object Merger {
     * name→bucket mapping survives (`{stem}_{32hex}_{tag}.parquet`).
     */
   private[compact] def bucketTagOf(name: String): Option[String] =
-    "_(\\d{5})\\.".r.findFirstMatchIn(name).map(_.group(1))
+    bucketTagRe.findFirstMatchIn(name).map(_.group(1))
+  private val bucketTagRe = "_(\\d{5})\\.".r
 
   def mergeAndCommit(spark: SparkSession, plan: LeafPlan, cfg: CompactorConfig): LeafResult = {
     if (cfg.commitMode == CommitMode.Manifest) return ManifestCommit.mergeAndCommit(spark, plan, cfg)
@@ -146,10 +141,8 @@ object Merger {
       stageWrite(spark, df, stagingDir, plan.totalBytes, rowsIn, cfg, runId)
 
       // Validate the staged output before touching the originals.
-      val staged0 = fs
-        .listStatus(new Path(stagingDir))
-        .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-      val rowsStaged = footerRows(spark, staged0.map(_.getPath.toString).toSeq)
+      val staged = KnownFiles.staged(spark, stagingDir)
+      val rowsStaged = staged.map(_.rows).sum
       if (rowsStaged != rowsIn) {
         fs.delete(new Path(stagingDir), true)
         return LeafResult(
@@ -161,7 +154,6 @@ object Merger {
       // Commit: move staged parts into place under idempotence-friendly
       // names ({stem}_{32hex}.parquet — recognized by the Planner's
       // compacted classifier on the next run), then delete originals.
-      val staged = staged0
       var moved = 0
       // Undo-tracked commit: a rename failure mid-loop would leave the
       // already-moved outputs in the leaf under committed-looking names —
@@ -171,7 +163,7 @@ object Merger {
       // still lets us.
       val renamed = scala.collection.mutable.ArrayBuffer.empty[Path]
       try {
-        staged.foreach { f =>
+        staged.map(_.status).foreach { f =>
           val hex = UUID.randomUUID().toString.replace("-", "")
           val outName = bucketTagOf(f.getPath.getName) match {
             case Some(tag) if cfg.bucketKey.nonEmpty => s"${plan.stem}_${hex}_$tag.parquet"

@@ -156,14 +156,9 @@ object WapCommit {
       .option("maxRecordsPerFile", cfg.maxRowsPerFile)
       .parquet(dataDir)
 
-    val staged = fs
-      .listStatus(new Path(dataDir))
-      .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-      .map(_.getPath)
-      .sortBy(_.getName)
-      .toSeq
-    val rowsStaged =
-      if (staged.isEmpty) 0L else Merger.footerRows(spark, staged.map(_.toString))
+    val probed = KnownFiles.staged(spark, dataDir)
+    val staged = probed.map(_.status.getPath)
+    val rowsStaged = probed.map(_.rows).sum
 
     // Empty micro-batches are ROUTINE foreachBatch inputs for the
     // streaming callers this API targets, and Spark may stage zero part

@@ -4,8 +4,12 @@ import java.io.File
 import java.nio.file.Files
 
 import org.apache.hadoop.fs.Path
+import org.apache.parquet.HadoopReadOptions
 import org.apache.parquet.example.data.simple.SimpleGroupFactory
+import org.apache.parquet.filter2.predicate.FilterApi
+import org.apache.parquet.hadoop.{ParquetFileReader, ParquetInputFormat}
 import org.apache.parquet.hadoop.example.ExampleParquetWriter
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.schema.MessageTypeParser
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.input_file_name
@@ -163,5 +167,38 @@ class KnownFilesSpec extends AnyFunSuite with Matchers with SparkSpec with Befor
     val strs = writeOne(d, "b.parquet", Seq((2L, "five")).toDF("id", "v"))
     an[Exception] should be thrownBy spark.read.option("mergeSchema", "true").parquet(ints, strs).schema
     an[Exception] should be thrownBy KnownFiles.read(spark, KnownFiles.probe(spark, Seq(ints, strs)), mergeSchema = true)
+  }
+
+  test("footer row counts ignore a filter predicate left in the session's Hadoop conf") {
+    val d = dir("filtered-stage")
+    // several row groups per file: a small block size, checked every 100 rows
+    val sizes = Seq(1000L, 700L, 300L)
+    val files = sizes.zipWithIndex.map { case (n, i) =>
+      val tmp = new File(d, s".tmp-$i")
+      spark.range(n).coalesce(1).write.option("parquet.block.size", "4096").parquet(tmp.getAbsolutePath)
+      val part = tmp.listFiles().find(_.getName.endsWith(".parquet")).get
+      val out = new File(d, s"part-$i.parquet")
+      Files.move(part.toPath, out.toPath)
+      tmp.listFiles().foreach(_.delete()); tmp.delete()
+      out.getAbsolutePath
+    }
+    val conf = spark.sparkContext.hadoopConfiguration
+    // id < Long.MinValue: every row group's min statistic rules it out
+    ParquetInputFormat.setFilterPredicate(conf, FilterApi.lt(FilterApi.longColumn("id"), java.lang.Long.valueOf(Long.MinValue)))
+    try {
+      val first = new Path(files.head)
+      val withConfFilter = ParquetFileReader.open(
+        HadoopInputFile.fromPath(first, conf), HadoopReadOptions.builder(conf, first).build())
+      try {
+        withConfFilter.getFooter.getBlocks.size should be > 1
+        withConfFilter.getRecordCount shouldBe 0L // the predicate does drop every row group
+      } finally withConfFilter.close()
+
+      KnownFiles.probe(spark, files).map(_.rows) shouldBe sizes
+      KnownFiles.rows(spark, files) shouldBe sizes.sum
+      val staged = KnownFiles.staged(spark, d.getAbsolutePath)
+      staged.map(_.status.getPath.getName) shouldBe Seq("part-0.parquet", "part-1.parquet", "part-2.parquet")
+      staged.map(_.rows) shouldBe sizes
+    } finally conf.unset(ParquetInputFormat.FILTER_PREDICATE)
   }
 }
