@@ -235,9 +235,8 @@ object BatchMerger {
     * a hidden `leaf/.data-<runId>/` dir (non-atomic is FINE here — the
     * dir is invisible until publish, so unlike the rename-mode loop
     * there is no partial-visible-commit state and no undo dance), then
-    * the atomic manifest PUT, then original GC. Any failure before
-    * publish deletes the hidden dir and retries solo — the leaf was
-    * never touched visibly.
+    * [[ManifestCommit.sealAndPublish]]. Any failure before publish rolls
+    * back and retries solo — the leaf was never touched visibly.
     */
   private def commitOneManifest(
       spark: SparkSession,
@@ -257,55 +256,23 @@ object BatchMerger {
           throw new java.io.IOException(s"move into hidden data dir failed for ${f.getPath}")
         s".data-$runId/${f.getPath.getName}"
       }.toSeq
-      // same pre-publish sidecar discipline as the solo manifest path:
-      // sidecars are debris until the manifest seals, reclaimed with
-      // the data dir on rollback
-      ManifestStats.writeSidecars(
-        spark, fs, p.plan.leaf, runId, outputsRel.map(rel => rel -> s"${p.plan.leaf}/$rel"), cfg)
-      val inputsRel = p.plan.files.map(ManifestCommit.relativeTo(p.plan.leaf, _))
       // the batch path reads plan files RAW, so it is only correct on a
       // leaf with no merge-on-read delete sidecars (Compactor routes
       // those solo); knownDeletes=empty makes publish abort loudly if
       // one exists or appears — never a silently resurrected row
-      ManifestCommit.publish(
-        fs, p.plan.leaf, p.plan.stem, runId, inputsRel, outputsRel, rowsStaged, cfg.commitRetries,
+      ManifestCommit.sealAndPublish(
+        spark, fs, p.plan.leaf, p.plan.stem, runId, p.plan.files, outputsRel, rowsStaged, cfg,
         knownDeletes = Some(Set.empty),
-      )
-      // same retention semantics as the solo manifest path: superseded
-      // inputs stay on disk under retainSuperseded for as-of reads
-      val undeleted =
-        if (cfg.retainSuperseded) Seq.empty
-        else p.plan.files.filterNot { f =>
-          try fs.delete(new Path(f), false)
-          catch { case _: Throwable => false }
-        }
-      LeafResult(
-        p.plan.leaf, p.plan.stem, success = true, rowsStaged, outputsRel.size,
-        if (undeleted.isEmpty) None
-        else Some(
-          s"committed; ${undeleted.size} superseded original(s) not deleted " +
-            s"(excluded from the live set by the manifest — debris, not duplicates): ${undeleted.mkString(", ")}",
-        ),
       )
     } catch {
       case e: Throwable =>
-        // same rollback order as ManifestCommit: the manifest must be
-        // verifiably gone before the data dir goes (a sealed manifest
-        // naming deleted outputs breaks readers), and the solo retry is
-        // only safe once neither artifact can affect the live set
-        val mp = new Path(s"${p.plan.leaf}/_manifest-${p.plan.stem}-$runId.json")
-        val manifestGone =
-          try { fs.delete(mp, false); !fs.exists(mp) }
-          catch { case _: Throwable => false }
-        if (!manifestGone) {
+        // the solo retry is only safe once the manifest is verifiably
+        // gone: then neither artifact can affect the live set
+        if (!ManifestCommit.rollback(spark, p.plan.leaf, p.plan.stem, runId, Some(dataDir.toString)))
           return LeafResult(
             p.plan.leaf, p.plan.stem, success = false, 0L, 0,
             Some(s"batch manifest commit failed (${e.toString}) and the manifest could not be removed — not retrying"),
           )
-        }
-        try fs.delete(dataDir, true)
-        catch { case _: Throwable => () }
-        ManifestStats.deleteSidecars(fs, p.plan.leaf, runId)
         System.err.println(
           s"[compact] batch manifest commit failed for ${p.plan.leaf}/${p.plan.stem} (${e.toString}); retrying solo",
         )

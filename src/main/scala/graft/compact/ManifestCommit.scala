@@ -54,15 +54,6 @@ final class ConcurrentCommitException(leaf: String, seq: Long, otherRunId: Strin
 
 object ManifestCommit {
 
-  /** How a rewrite folds the leaf's outstanding merge-on-read delete
-    * sidecars (see [[foldForInputs]]): `touchingRel` are the sidecar
-    * files it must CONSUME (list in `inputs`), `applied` the positions
-    * to anti-join out of the rewrite (they target plan files), and
-    * `residual` the consumed sidecars' OTHER positions, re-sealed as
-    * this commit's own delete sidecar so a touched sidecar is always
-    * retired whole — partial consumption would leave entries whose
-    * retraction algebra no feed consumer could replay exactly.
-    */
   /** A touched equality sidecar's reseal: the SAME key tuples over the
     * scope files the rewrite did NOT supersede (`prior` positions and
     * `refs` narrowed/carried along) — a touched eq sidecar is always
@@ -75,7 +66,16 @@ object ManifestCommit {
       refs: Seq[String],
   )
 
-  private final case class DeleteFold(
+  /** How a rewrite folds the leaf's outstanding merge-on-read delete
+    * sidecars (see [[foldForInputs]]): `touchingRel` are the sidecar
+    * files it must CONSUME (list in `inputs`), `applied` the positions
+    * to anti-join out of the rewrite (they target plan files), and
+    * `residual` the consumed sidecars' OTHER positions, re-sealed as
+    * this commit's own delete sidecar so a touched sidecar is always
+    * retired whole — partial consumption would leave entries whose
+    * retraction algebra no feed consumer could replay exactly.
+    */
+  private[compact] final case class DeleteFold(
       touchingRel: Seq[String],
       applied: Option[DataFrame],
       appliedRows: Long,
@@ -84,7 +84,7 @@ object ManifestCommit {
       eqResiduals: Seq[EqReseal] = Seq.empty,
   )
 
-  private val NoFold = DeleteFold(Seq.empty, None, 0L, None, 0L)
+  private[compact] val NoFold = DeleteFold(Seq.empty, None, 0L, None, 0L)
 
   /** Classify the leaf's live delete sidecars against a rewrite's input
     * set. Position sidecars are churn-bounded position files: the
@@ -198,13 +198,6 @@ object ManifestCommit {
     pos ++ eq
   }
 
-  /** Seal `residual` positions (if any) as this run's own delete
-    * sidecar under `.delete-<runId>/`, returning (relative sidecar
-    * paths, row count). ONE part file per commit — the walk resolves a
-    * consumed sidecar's row count from its producing manifest only when
-    * it consumes the producer's sidecar set whole, and a single file
-    * makes that the only possible shape.
-    */
   /** Best-effort reclaim of a dead run's row-level sidecar stages
     * (the `.delete-<runId>/` dir and every `.eqdel-<runId>*-*` dir) —
     * call only after the run's manifest is proven unsealed.
@@ -226,15 +219,25 @@ object ManifestCommit {
     * If the manifest can't be removed, everything stays so the
     * (manifest, data) pair stays consistent; otherwise the data dir, the
     * row-level delete stages and the stats/bloom sidecars go too.
+    * Returns whether the manifest is gone: only then can the commit's
+    * work be retried some other way without touching the live set.
     */
-  private def rollback(spark: SparkSession, leaf: String, stem: String, runId: String, dataDir: Option[String]): Unit =
-    (try Some(FileIndexer.fsFor(spark, leaf)) catch { case _: Throwable => None }).foreach { fs =>
+  private[compact] def rollback(
+      spark: SparkSession,
+      leaf: String,
+      stem: String,
+      runId: String,
+      dataDir: Option[String],
+  ): Boolean =
+    (try Some(FileIndexer.fsFor(spark, leaf)) catch { case _: Throwable => None }).exists { fs =>
       val mp = new Path(s"$leaf/_manifest-$stem-$runId.json")
-      if (try { fs.delete(mp, false); !fs.exists(mp) } catch { case _: Throwable => false }) {
+      val gone = try { fs.delete(mp, false); !fs.exists(mp) } catch { case _: Throwable => false }
+      if (gone) {
         dataDir.foreach(d => try { fs.delete(new Path(d), true); () } catch { case _: Throwable => () })
         cleanupRunSidecars(fs, leaf, runId)
         ManifestStats.deleteSidecars(fs, leaf, runId)
       }
+      gone
     }
 
   /** A row rewrite's staged files with rows in them (name-sorted), and
@@ -247,6 +250,13 @@ object ManifestCommit {
     (staged.filter(_.rows > 0L).map(_.status.getPath), staged.map(_.rows).sum)
   }
 
+  /** Seal `positions` as this run's own delete sidecar under
+    * `.delete-<runId>/`, returning its leaf-relative file paths. ONE
+    * part file per commit — the walk resolves a consumed sidecar's row
+    * count from its producing manifest only when it consumes the
+    * producer's sidecar set whole, and a single file makes that the
+    * only possible shape.
+    */
   private def writeDeleteSidecar(
       spark: SparkSession,
       fs: FileSystem,
@@ -266,13 +276,207 @@ object ManifestCommit {
       .sorted.toSeq
   }
 
+  /** The tail of every commit that stages data: seal the outputs' stats
+    * and bloom sidecars and the fold's residual delete sidecars (debris
+    * until the manifest seals, reclaimed by [[rollback]]), publish the
+    * manifest superseding `inputs` (absolute data paths) and the
+    * sidecars the fold consumed, then delete what it superseded.
+    *
+    * The delete is best-effort BY DESIGN: the manifest already subtracts
+    * those files from the live set, so a failed delete is reported as
+    * debris, never as duplicate rows. With `cfg.retainSuperseded` they
+    * are kept deliberately — the time-travel retention mode
+    * ([[readLeafAt]] needs them to reconstruct earlier snapshots) — and
+    * a consumed equality-sidecar file that a LIVE sidecar still
+    * excludes through is kept too (a retention dependency, like a
+    * position target), not reported as a failure.
+    *
+    * Throws on any failure before or at the publish; the caller rolls
+    * back.
+    */
+  private[compact] def sealAndPublish(
+      spark: SparkSession,
+      fs: FileSystem,
+      leaf: String,
+      stem: String,
+      runId: String,
+      inputs: Seq[String],
+      outputsRel: Seq[String],
+      rows: Long,
+      cfg: CompactorConfig,
+      fold: DeleteFold = NoFold,
+      knownDeletes: Option[Set[String]] = None,
+      mutates: Boolean = false,
+  ): LeafResult = {
+    ManifestStats.writeSidecars(spark, fs, leaf, runId, outputsRel.map(r => r -> s"$leaf/$r"), cfg)
+    val deletesRel = writeFoldResiduals(spark, fs, leaf, runId, fold)
+    // COMMIT POINT: one PUT of the sealed manifest. Everything before
+    // this line is invisible; everything after is garbage collection.
+    publish(
+      fs, leaf, stem, runId, inputs.map(relativeTo(leaf, _)) ++ fold.touchingRel, outputsRel, rows,
+      cfg.commitRetries, deletesRel = deletesRel, drows = fold.residualRows, knownDeletes = knownDeletes,
+      mutates = mutates,
+    )
+    val undeleted =
+      if (cfg.retainSuperseded) Seq.empty
+      else {
+        val refStems =
+          if (fold.touchingRel.exists(isEqDeleteRel)) liveEqRefStems(spark, leaf)
+          else Set.empty[String]
+        (inputs ++ fold.touchingRel.map(r => s"$leaf/$r"))
+          .filterNot(p => underEqStems(refStems, relativeTo(leaf, p)))
+          .filterNot { p =>
+            try fs.delete(new Path(p), false)
+            catch { case _: Throwable => false }
+          }
+      }
+    LeafResult(
+      leaf, stem, success = true, rows, outputsRel.size,
+      if (undeleted.isEmpty) None
+      else Some(
+        s"committed; ${undeleted.size} superseded original(s) not deleted " +
+          s"(excluded from the live set by the manifest — debris, not duplicates): ${undeleted.mkString(", ")}",
+      ),
+    )
+  }
+
+  /** Rewrite `inputs` (data files of `leaf`, each with its probe) as
+    * one manifest commit — the one path compaction, DELETE, UPDATE and MERGE share:
+    *
+    *   1. fold the leaf's live delete sidecars that touch the inputs
+    *      ([[foldForInputs]]); `rowsIn` is the inputs' footer rows minus
+    *      the rows the fold applies;
+    *   2. read the inputs from their probe (no listing, no schema job),
+    *      with the fold's positions anti-joined out;
+    *   3. `stage` maps that frame (None when there are no inputs) and
+    *      `rowsIn` to the rows to write, staged into a hidden
+    *      `.data-<runId>/` (snappy, `cfg.maxRowsPerFile` rows a file at
+    *      most; 0-row files dropped);
+    *   4. validate the staged footer rows against `expect(rowsIn)`,
+    *      reporting `detail` after the input count on a mismatch;
+    *   5. [[sealAndPublish]]; any throw rolls the commit back.
+    */
+  private def rewrite(
+      spark: SparkSession,
+      fs: FileSystem,
+      leaf: String,
+      stem: String,
+      st0: HeadState,
+      inputs: Seq[(String, KnownFiles.Known)],
+      cfg: CompactorConfig,
+      expect: Long => Long = identity,
+      detail: String = "",
+      mutates: Boolean = false,
+  )(stage: (Option[DataFrame], Long) => DataFrame): LeafResult = {
+    val runId = UUID.randomUUID().toString.replace("-", "")
+    val dataDir = s"$leaf/.data-$runId"
+    try {
+      val (paths, known) = inputs.unzip
+      val fold = foldForInputs(spark, leaf, paths.map(relativeTo(leaf, _)).toSet, st0.deletes)
+      val rowsIn = known.map(_.rows).sum - fold.appliedRows
+      val read = if (known.isEmpty) None else Some(KnownFiles.read(spark, known, mergeSchema = true))
+      val rows = fold.applied match {
+        case None          => read
+        case Some(applied) => read.map(df => antiJoinPositions(withPos(spark, leaf, df), applied))
+      }
+      stage(rows, rowsIn)
+        .write
+        .option("compression", "snappy")
+        .option("maxRecordsPerFile", cfg.maxRowsPerFile)
+        .mode("overwrite").parquet(dataDir)
+      val (outFiles, rowsStaged) = nonEmptyStaged(spark, fs, dataDir)
+      if (rowsStaged != expect(rowsIn)) {
+        fs.delete(new Path(dataDir), true)
+        return LeafResult(
+          leaf, stem, success = false, rowsStaged, 0,
+          Some(s"validation failed: staged $rowsStaged rows != input $rowsIn$detail"),
+        )
+      }
+      sealAndPublish(
+        spark, fs, leaf, stem, runId, paths, outFiles.map(p => s".data-$runId/${p.getName}"), rowsStaged, cfg,
+        fold, knownDeletes = Some(st0.deletes.toSet), mutates = mutates,
+      )
+    } catch {
+      case e: Throwable =>
+        rollback(spark, leaf, stem, runId, Some(dataDir))
+        LeafResult(leaf, stem, success = false, 0L, 0, Some(e.toString))
+    }
+  }
+
+  /** The candidate files of a row-level DML commit: the leaf's state,
+    * the candidates probed once (the rewrite reads its hit files from
+    * this same probe) and their delete-aware scan built from the probe
+    * (no listing, no schema job), `_mor_rel`/`_mor_pos` identity columns
+    * kept.
+    */
+  private final case class Candidates(
+      fs: FileSystem,
+      leaf: String,
+      st0: HeadState,
+      paths: Seq[String],
+      known: Map[String, KnownFiles.Known],
+      aware: DataFrame,
+  ) {
+
+    /** The candidates holding a row of `matching(aware)`, with their
+      * probes (in candidate order), and the number of such rows — one
+      * per-file count over the classification scan.
+      */
+    def hits(matching: DataFrame => DataFrame): (Seq[(String, KnownFiles.Known)], Long) = {
+      import org.apache.spark.sql.functions.{col, count, lit}
+      val perFile = matching(aware).groupBy(col("_mor_rel").as("_hit")).agg(count(lit(1)).as("_n")).collect()
+      val hitRels = perFile.map(_.getString(0)).toSet
+      (paths.filter(p => hitRels(relativeTo(leaf, p))).map(p => p -> known(p)), perFile.map(_.getLong(1)).sum)
+    }
+  }
+
+  private def scanOf(
+      spark: SparkSession,
+      leaf: String,
+      fs: FileSystem,
+      st0: HeadState,
+      candidates: Seq[String],
+  ): Candidates = {
+    val known = candidates.zip(KnownFiles.probe(spark, candidates)).toMap
+    val aware = awareWithPos(spark, leaf, candidates, st0.deletes.map(r => s"$leaf/$r")) { files =>
+      withPos(spark, leaf, KnownFiles.read(spark, files.map(known), mergeSchema = true))
+    }
+    Candidates(fs, leaf, st0, candidates, known, aware)
+  }
+
+  /** The front of a predicate DML commit ([[deleteWhere]],
+    * [[updateWhere]], [[deleteWhereMoR]]). Candidates are the live files
+    * the skipping layer cannot rule out for `cond` (ROADMAP 90: with
+    * stats/bloom sidecars on the predicate's columns, files that cannot
+    * hold a matching row are never opened — a narrow retention delete
+    * on a wide leaf is candidate-bounded, and the never-wrongly-pruned
+    * sidecar contract makes the shortcut exact). Their scan is
+    * DELETE-AWARE: a row an outstanding MoR sidecar already retracted
+    * neither matches nor re-deletes; hits group on the materialized
+    * `_mor_rel` column, a plain column that survives the anti join,
+    * where the `_metadata` pseudo-column would not resolve. None when
+    * the leaf is missing, nothing is live or the prune leaves nothing.
+    */
+  private def predicateScan(
+      spark: SparkSession,
+      leaf: String,
+      cond: org.apache.spark.sql.Column,
+  ): Option[Candidates] = {
+    val fs = FileIndexer.fsFor(spark, leaf)
+    val leafPath = new Path(leaf)
+    if (!fs.exists(leafPath)) return None
+    val st0 = resolveState(fs, leaf, fs.listStatus(leafPath))
+    val live = liveFiles(spark, leaf)
+    if (live.isEmpty) return None
+    val candidates = ManifestStats.pruneByPredicate(spark, leaf, live, cond)
+    if (candidates.isEmpty) None else Some(scanOf(spark, leaf, fs, st0, candidates))
+  }
+
   /** Merge one plan and commit via manifest publish. Mirrors
     * [[Merger.mergeAndCommit]]'s validate-before-commit discipline; only
     * the commit mechanism differs.
     */
-  def mergeAndCommit(spark: SparkSession, plan: LeafPlan, cfg: CompactorConfig): LeafResult = {
-    val runId = UUID.randomUUID().toString.replace("-", "")
-    val dataDir = s"${plan.leaf}/.data-$runId"
+  def mergeAndCommit(spark: SparkSession, plan: LeafPlan, cfg: CompactorConfig): LeafResult =
     try {
       val fs = FileIndexer.fsFor(spark, plan.leaf)
       val leafPath = new Path(plan.leaf)
@@ -289,94 +493,23 @@ object ManifestCommit {
       // clean no-op when nothing live is left).
       val files = plan.files.filterNot(p => st0.superseded(relativeTo(plan.leaf, p)))
       if (files.isEmpty)
-        return LeafResult(
+        LeafResult(
           plan.leaf, plan.stem, success = true, 0L, 0,
           Some("no-op: every planned input is already superseded (retained history)"),
         )
-      val planRel = files.map(relativeTo(plan.leaf, _))
-      // Fold outstanding merge-on-read delete sidecars into the rewrite:
-      // positions targeting plan files are applied (those rows do not
-      // survive), touched sidecars are consumed whole (their other
-      // positions re-seal as this commit's residual sidecar), and the
-      // publish-time tripwire aborts if a sidecar this fold didn't see
-      // appears concurrently. Zero extra work when the leaf has none.
-      val fold = foldForInputs(spark, plan.leaf, planRel.toSet, st0.deletes)
-      val known = KnownFiles.probe(spark, files)
-      val rowsIn = known.map(_.rows).sum - fold.appliedRows
-
-      val df = fold.applied match {
-        case None =>
-          KnownFiles.read(spark, known, mergeSchema = true)
-        case Some(applied) =>
-          antiJoinPositions(readWithPos(spark, plan.leaf, files), applied)
-      }
-      Merger.stageWrite(spark, df, dataDir, plan.totalBytes, rowsIn, cfg, runId)
-
-      val staged = KnownFiles.staged(spark, dataDir)
-      val outFiles = staged.map(_.status.getPath)
-      val rowsStaged = staged.map(_.rows).sum
-      if (rowsStaged != rowsIn) {
-        fs.delete(new Path(dataDir), true)
-        return LeafResult(
-          plan.leaf, plan.stem, success = false, rowsStaged, 0,
-          Some(s"validation failed: staged $rowsStaged rows != input $rowsIn"),
-        )
-      }
-
-      // Stats sidecar BEFORE the commit point: if the publish dies the
-      // sidecar is debris beside the data dir (same reclaim path), and a
-      // sidecar is only consulted for files a sealed manifest made live.
-      val outputsRel = outFiles.map(p => s".data-$runId/${p.getName}")
-      ManifestStats.writeSidecars(spark, fs, plan.leaf, runId, outputsRel.zip(outFiles.map(_.toString)), cfg)
-
-      // Residual delete sidecars BEFORE the commit point — debris until
-      // the manifest seals, exactly like the data stage.
-      val deletesRel = writeFoldResiduals(spark, fs, plan.leaf, runId, fold)
-
-      // COMMIT POINT: one PUT of the sealed manifest. Everything before
-      // this line is invisible; everything after is garbage collection.
-      val inputsRel = planRel ++ fold.touchingRel
-      publish(
-        fs, plan.leaf, plan.stem, runId, inputsRel, outputsRel, rowsStaged, cfg.commitRetries,
-        deletesRel = deletesRel, drows = fold.residualRows, knownDeletes = Some(st0.deletes.toSet),
-      )
-
-      // GC the superseded originals (data files AND consumed delete
-      // sidecars). Best-effort BY DESIGN: the manifest already subtracts
-      // them from the live set, so a failed delete is surfaced as
-      // debris, never as duplicate rows. With cfg.retainSuperseded they
-      // are kept deliberately — the time-travel retention mode
-      // ([[readLeafAt]] needs them to reconstruct earlier snapshots).
-      val undeleted =
-        if (cfg.retainSuperseded) Seq.empty
-        else {
-          // consumed eq-sidecar files a LIVE sidecar still excludes
-          // through must survive (retention dependency, like position
-          // targets) — retained on purpose, not reported as failures
-          val refStems =
-            if (fold.touchingRel.exists(isEqDeleteRel)) liveEqRefStems(spark, plan.leaf)
-            else Set.empty[String]
-          (files ++ fold.touchingRel.map(r => s"${plan.leaf}/$r"))
-            .filterNot(p => underEqStems(refStems, relativeTo(plan.leaf, p)))
-            .filterNot { p =>
-              try fs.delete(new Path(p), false)
-              catch { case _: Throwable => false }
-            }
+      else
+        // Outstanding merge-on-read delete sidecars fold into the
+        // rewrite: positions targeting plan files are applied (those
+        // rows do not survive), touched sidecars are consumed whole
+        // (their other positions re-seal as this commit's residual
+        // sidecar), and the publish-time tripwire aborts if a sidecar
+        // this fold didn't see appears concurrently.
+        rewrite(spark, fs, plan.leaf, plan.stem, st0, files.zip(KnownFiles.probe(spark, files)), cfg) { (rows, rowsIn) =>
+          Merger.sizeForOutput(rows.get, plan.totalBytes, rowsIn, cfg)
         }
-      LeafResult(
-        plan.leaf, plan.stem, success = true, rowsStaged, outFiles.size,
-        if (undeleted.isEmpty) None
-        else Some(
-          s"committed; ${undeleted.size} superseded original(s) not deleted " +
-            s"(excluded from the live set by the manifest — debris, not duplicates): ${undeleted.mkString(", ")}",
-        ),
-      )
     } catch {
-      case e: Throwable =>
-        rollback(spark, plan.leaf, plan.stem, runId, Some(dataDir))
-        LeafResult(plan.leaf, plan.stem, success = false, 0L, 0, Some(e.toString))
+      case e: Throwable => LeafResult(plan.leaf, plan.stem, success = false, 0L, 0, Some(e.toString))
     }
-  }
 
   /** Range-targeted re-compaction THROUGH the skipping layer — the
     * partial-rewrite primitive (compact/re-cluster ONE key range of a
@@ -444,95 +577,18 @@ object ManifestCommit {
       stem: String = "delete",
   ): Option[LeafResult] = {
     require(cfg.commitMode == CommitMode.Manifest, "deleteWhere requires manifest mode (atomic supersede of partially-rewritten files)")
-    val fs = FileIndexer.fsFor(spark, leaf)
-    val leafPath = new Path(leaf)
-    if (!fs.exists(leafPath)) return None
-    val st0 = resolveState(fs, leaf, fs.listStatus(leafPath))
-    val live = liveFiles(spark, leaf)
-    if (live.isEmpty) return None
-    import org.apache.spark.sql.functions.{col => c, count => cnt, lit}
-    // skipping-layer prune (ROADMAP 90): with stats/bloom sidecars on
-    // the predicate's columns, files that cannot hold a matching row
-    // are never even opened by the classification pass — a narrow
-    // retention delete on a wide leaf is candidate-bounded, and the
-    // never-wrongly-pruned sidecar contract makes the shortcut exact
-    val candidates = ManifestStats.pruneByPredicate(spark, leaf, live, cond)
-    if (candidates.isEmpty) return None
-    // classification runs DELETE-AWARE: a row an outstanding MoR sidecar
-    // already retracted must neither count as a match nor re-delete.
-    // Grouping key is the materialized `_mor_rel` column (stamped at the
-    // scan) — a plain column that survives the anti join, where the
-    // `_metadata` pseudo-column would not resolve.
-    val liveDelAbs = st0.deletes.map(r => s"$leaf/$r")
-    val awareScan = awareWithPos(spark, leaf, candidates, liveDelAbs)
-    val perFile = awareScan
-      .where(cond)
-      .groupBy(c("_mor_rel").as("_df"))
-      .agg(cnt(lit(1)).as("_n"))
-      .collect()
-    if (perFile.isEmpty) return None
-    val hitRelSet = perFile.map(_.getString(0)).toSet
-    val matched = perFile.map(_.getLong(1)).sum
-    val inputs = candidates.filter(p => hitRelSet.contains(relativeTo(leaf, p)))
-    val inputsDataRel = inputs.map(relativeTo(leaf, _))
-    val fold = foldForInputs(spark, leaf, inputsDataRel.toSet, st0.deletes)
-    val runId = UUID.randomUUID().toString.replace("-", "")
-    val dataDir = s"$leaf/.data-$runId"
-    try {
-      val rowsIn = KnownFiles.rows(spark, inputs) - fold.appliedRows
+    import org.apache.spark.sql.functions.{coalesce, lit}
+    predicateScan(spark, leaf, cond).flatMap { scan =>
+      val (inputs, matched) = scan.hits(_.where(cond))
       // SQL DELETE semantics: only cond=TRUE rows go; a NULL-evaluating
       // row SURVIVES (a bare !cond would silently drop it — and the
-      // rowsIn − matched validation below would catch exactly that).
-      // Folded sidecar positions are applied first, so the rewrite's
-      // survivors are exactly the delete-aware rows that fail cond.
-      val aware = fold.applied match {
-        case None => spark.read.option("mergeSchema", "true").parquet(inputs: _*)
-        case Some(applied) => antiJoinPositions(readWithPos(spark, leaf, inputs), applied)
-      }
-      aware
-        .where(!org.apache.spark.sql.functions.coalesce(cond, lit(false)))
-        .write.mode("overwrite").parquet(dataDir)
-      val (outFiles, rowsStaged) = nonEmptyStaged(spark, fs, dataDir)
-      if (rowsStaged != rowsIn - matched) {
-        fs.delete(new Path(dataDir), true)
-        return Some(LeafResult(
-          leaf, stem, success = false, rowsStaged, 0,
-          Some(s"validation failed: staged $rowsStaged rows != input $rowsIn - matched $matched"),
-        ))
-      }
-      val outputsRel = outFiles.map(p => s".data-$runId/${p.getName}")
-      // bloom sidecars too, like every rewrite path — without them the
-      // survivors of a retention delete silently lose string-equality
-      // pruning
-      ManifestStats.writeSidecars(spark, fs, leaf, runId, outputsRel.zip(outFiles.map(_.toString)), cfg)
-      val deletesRel = writeFoldResiduals(spark, fs, leaf, runId, fold)
-      val inputsRel = inputsDataRel ++ fold.touchingRel
-      publish(
-        fs, leaf, stem, runId, inputsRel, outputsRel, rowsStaged, cfg.commitRetries,
-        deletesRel = deletesRel, drows = fold.residualRows, knownDeletes = Some(st0.deletes.toSet),
-      )
-      val undeleted =
-        if (cfg.retainSuperseded) Seq.empty
-        else {
-          val refStems =
-            if (fold.touchingRel.exists(isEqDeleteRel)) liveEqRefStems(spark, leaf)
-            else Set.empty[String]
-          (inputs ++ fold.touchingRel.map(r => s"$leaf/$r"))
-            .filterNot(p => underEqStems(refStems, relativeTo(leaf, p)))
-            .filterNot { p =>
-              try fs.delete(new Path(p), false)
-              catch { case _: Throwable => false }
-            }
-        }
-      Some(LeafResult(
-        leaf, stem, success = true, rowsStaged, outFiles.size,
-        if (undeleted.isEmpty) None
-        else Some(s"committed; ${undeleted.size} superseded original(s) left as debris"),
-      ))
-    } catch {
-      case e: Throwable =>
-        rollback(spark, leaf, stem, runId, Some(dataDir))
-        Some(LeafResult(leaf, stem, success = false, 0L, 0, Some(e.toString)))
+      // rowsIn − matched validation would catch exactly that). Folded
+      // sidecar positions are applied first, so the rewrite's survivors
+      // are exactly the delete-aware rows that fail cond.
+      if (inputs.isEmpty) None
+      else Some(rewrite(
+        spark, scan.fs, leaf, stem, scan.st0, inputs, cfg, _ - matched, s" - matched $matched",
+      )((rows, _) => rows.get.where(!coalesce(cond, lit(false)))))
     }
   }
 
@@ -567,96 +623,35 @@ object ManifestCommit {
   ): Option[LeafResult] = {
     require(cfg.commitMode == CommitMode.Manifest, "updateWhere requires manifest mode (atomic supersede of partially-rewritten files)")
     require(set.nonEmpty, "UPDATE needs at least one assignment")
-    val fs = FileIndexer.fsFor(spark, leaf)
-    val leafPath = new Path(leaf)
-    if (!fs.exists(leafPath)) return None
-    val st0 = resolveState(fs, leaf, fs.listStatus(leafPath))
-    val live = liveFiles(spark, leaf)
-    if (live.isEmpty) return None
-    import org.apache.spark.sql.functions.{coalesce, col => c, count => cnt, lit, when}
-    val candidates = ManifestStats.pruneByPredicate(spark, leaf, live, cond)
-    if (candidates.isEmpty) return None
-    val liveDelAbs = st0.deletes.map(r => s"$leaf/$r")
-    val awareScan = awareWithPos(spark, leaf, candidates, liveDelAbs)
-    // validate against the DATA schema, not the scan: the _mor_rel/
-    // _mor_pos identity columns readWithPos adds are not assignable (an
-    // assignment targeting them would pass the require and then be
-    // silently ignored — absent from the staged schema) and must not be
-    // advertised as leaf columns in the error either
-    val dataCols = awareScan.columns.filterNot(c0 => c0 == "_mor_rel" || c0 == "_mor_pos")
-    set.keys.foreach(k => require(
-      dataCols.exists(_.equalsIgnoreCase(k)),
-      s"UPDATE assignment targets unknown column '$k' (leaf columns: ${dataCols.mkString(", ")})",
-    ))
-    val perFile = awareScan.where(cond)
-      .groupBy(c("_mor_rel").as("_uf"))
-      .agg(cnt(lit(1)).as("_n"))
-      .collect()
-    if (perFile.isEmpty) return None
-    val hitRelSet = perFile.map(_.getString(0)).toSet
-    val inputs = candidates.filter(p => hitRelSet.contains(relativeTo(leaf, p)))
-    val inputsDataRel = inputs.map(relativeTo(leaf, _))
-    val fold = foldForInputs(spark, leaf, inputsDataRel.toSet, st0.deletes)
-    val runId = UUID.randomUUID().toString.replace("-", "")
-    val dataDir = s"$leaf/.data-$runId"
-    try {
-      val rowsIn = KnownFiles.rows(spark, inputs) - fold.appliedRows
-      val aware = fold.applied match {
-        case None => spark.read.option("mergeSchema", "true").parquet(inputs: _*)
-        case Some(applied) => antiJoinPositions(readWithPos(spark, leaf, inputs), applied)
-      }
-      // SQL UPDATE semantics: only cond=TRUE rows change; the cast back
-      // to the column's own type keeps the leaf schema fixed
-      val safeCond = coalesce(cond, lit(false))
-      val staged = aware.select(aware.schema.fields.map { f =>
-        set.find(_._1.equalsIgnoreCase(f.name)) match {
-          case Some((_, v)) => when(safeCond, v.cast(f.dataType)).otherwise(c(f.name)).as(f.name)
-          case None         => c(f.name)
-        }
-      }.toSeq: _*)
-      staged.write
-        .option("compression", "snappy")
-        .option("maxRecordsPerFile", cfg.maxRowsPerFile)
-        .mode("overwrite").parquet(dataDir)
-      val (outFiles, rowsStaged) = nonEmptyStaged(spark, fs, dataDir)
-      if (rowsStaged != rowsIn) {
-        fs.delete(new Path(dataDir), true)
-        return Some(LeafResult(
-          leaf, stem, success = false, rowsStaged, 0,
-          Some(s"validation failed: staged $rowsStaged rows != input $rowsIn (UPDATE must preserve rows)"),
-        ))
-      }
-      val outputsRel = outFiles.map(p => s".data-$runId/${p.getName}")
-      ManifestStats.writeSidecars(spark, fs, leaf, runId, outputsRel.zip(outFiles.map(_.toString)), cfg)
-      val deletesRel = writeFoldResiduals(spark, fs, leaf, runId, fold)
-      val inputsRel = inputsDataRel ++ fold.touchingRel
-      publish(
-        fs, leaf, stem, runId, inputsRel, outputsRel, rowsStaged, cfg.commitRetries,
-        deletesRel = deletesRel, drows = fold.residualRows, knownDeletes = Some(st0.deletes.toSet),
-        mutates = true,
-      )
-      val undeleted =
-        if (cfg.retainSuperseded) Seq.empty
-        else {
-          val refStems =
-            if (fold.touchingRel.exists(isEqDeleteRel)) liveEqRefStems(spark, leaf)
-            else Set.empty[String]
-          (inputs ++ fold.touchingRel.map(r => s"$leaf/$r"))
-            .filterNot(p => underEqStems(refStems, relativeTo(leaf, p)))
-            .filterNot { p =>
-              try fs.delete(new Path(p), false)
-              catch { case _: Throwable => false }
-            }
-        }
-      Some(LeafResult(
-        leaf, stem, success = true, rowsStaged, outFiles.size,
-        if (undeleted.isEmpty) None
-        else Some(s"committed; ${undeleted.size} superseded original(s) left as debris"),
+    import org.apache.spark.sql.functions.{coalesce, col => c, lit, when}
+    predicateScan(spark, leaf, cond).flatMap { scan =>
+      // validate against the DATA schema, not the scan: the _mor_rel/
+      // _mor_pos identity columns withPos adds are not assignable (an
+      // assignment targeting them would pass the require and then be
+      // silently ignored — absent from the staged schema) and must not be
+      // advertised as leaf columns in the error either
+      val dataCols = scan.aware.columns.filterNot(c0 => c0 == "_mor_rel" || c0 == "_mor_pos")
+      set.keys.foreach(k => require(
+        dataCols.exists(_.equalsIgnoreCase(k)),
+        s"UPDATE assignment targets unknown column '$k' (leaf columns: ${dataCols.mkString(", ")})",
       ))
-    } catch {
-      case e: Throwable =>
-        rollback(spark, leaf, stem, runId, Some(dataDir))
-        Some(LeafResult(leaf, stem, success = false, 0L, 0, Some(e.toString)))
+      val (inputs, _) = scan.hits(_.where(cond))
+      if (inputs.isEmpty) None
+      else Some(rewrite(
+        spark, scan.fs, leaf, stem, scan.st0, inputs, cfg,
+        detail = " (UPDATE must preserve rows)", mutates = true,
+      ) { (rows, _) =>
+        // SQL UPDATE semantics: only cond=TRUE rows change; the cast back
+        // to the column's own type keeps the leaf schema fixed
+        val aware = rows.get
+        val safeCond = coalesce(cond, lit(false))
+        aware.select(aware.schema.fields.map { f =>
+          set.find(_._1.equalsIgnoreCase(f.name)) match {
+            case Some((_, v)) => when(safeCond, v.cast(f.dataType)).otherwise(c(f.name)).as(f.name)
+            case None         => c(f.name)
+          }
+        }.toSeq: _*)
+      })
     }
   }
 
@@ -693,19 +688,12 @@ object ManifestCommit {
       stem: String = "delete-mor",
   ): Option[LeafResult] = {
     require(cfg.commitMode == CommitMode.Manifest, "deleteWhereMoR requires manifest mode (the sidecar is a manifest commit)")
-    val fs = FileIndexer.fsFor(spark, leaf)
-    val leafPath = new Path(leaf)
-    if (!fs.exists(leafPath)) return None
-    val st0 = resolveState(fs, leaf, fs.listStatus(leafPath))
-    val live = liveFiles(spark, leaf)
-    if (live.isEmpty) return None
     import org.apache.spark.sql.functions.col
-    val candidates = ManifestStats.pruneByPredicate(spark, leaf, live, cond)
-    if (candidates.isEmpty) return None
-    val liveDelAbs = st0.deletes.map(r => s"$leaf/$r")
-    val aware = awareWithPos(spark, leaf, candidates, liveDelAbs)
-    val matchedPos = aware.where(cond)
-      .select(col("_mor_rel").as(DelFile), col("_mor_pos").as(DelPos))
+    val (fs, st0, matchedPos) = predicateScan(spark, leaf, cond) match {
+      case Some(scan) =>
+        (scan.fs, scan.st0, scan.aware.where(cond).select(col("_mor_rel").as(DelFile), col("_mor_pos").as(DelPos)))
+      case None => return None
+    }
     val runId = UUID.randomUUID().toString.replace("-", "")
     try {
       val deletesRel = writeDeleteSidecar(spark, fs, leaf, runId, matchedPos)
@@ -1000,9 +988,8 @@ object ManifestCommit {
         s"merge source is not key-unique on (${keys.mkString(", ")}) — " +
           "two editions of one key make the result order-dependent; dedupe upstream (e.g. keep-latest)",
       )
-      val liveDelAbs = st0.deletes.map(r => s"$leaf/$r")
-      val (hit: Seq[String], matched: Long) =
-        if (live.isEmpty) (Seq.empty[String], 0L)
+      val (hit, matched) =
+        if (live.isEmpty) (Seq.empty, 0L)
         else {
           val pruneCond = numericKeys
             .map(k => col(k) >= lit(a.getAs[Double](s"_lo_$k")) && col(k) <= lit(a.getAs[Double](s"_hi_$k")))
@@ -1029,38 +1016,21 @@ object ManifestCommit {
               }.toMap
               ManifestStats.pruneByKeySet(spark, leaf, rangeCands, keyVals)
             } else rangeCands
-          if (candidates.isEmpty) (Seq.empty[String], 0L)
-          else {
-            val srcKeys = src.select(keys.map(col): _*)
-            val aware = awareWithPos(spark, leaf, candidates, liveDelAbs)
-            val perFile = aware
-              .join(srcKeys, keys, "left_semi")
-              .groupBy(col("_mor_rel").as("_mf"))
-              .agg(count(lit(1)).as("_mn"))
-              .collect()
-            val hitRelSet = perFile.map(_.getString(0)).toSet
-            (candidates.filter(p => hitRelSet.contains(relativeTo(leaf, p))), perFile.map(_.getLong(1)).sum)
-          }
+          if (candidates.isEmpty) (Seq.empty, 0L)
+          else scanOf(spark, leaf, fs, st0, candidates).hits(_.join(src.select(keys.map(col): _*), keys, "left_semi"))
         }
-      val hitRel = hit.map(relativeTo(leaf, _))
-      val fold = foldForInputs(spark, leaf, hitRel.toSet, st0.deletes)
-      val runId = UUID.randomUUID().toString.replace("-", "")
-      val dataDir = s"$leaf/.data-$runId"
-      try {
-        val rowsIn = (if (hit.isEmpty) 0L else KnownFiles.rows(spark, hit)) - fold.appliedRows
-        // survivors: hit rows (delete-aware) whose key has NO source
-        // edition — plain-equality anti join, so NULL-key target rows
-        // always survive; then the source appends whole
-        val survivors =
-          if (hit.isEmpty) None
-          else {
-            val aware = fold.applied match {
-              case None => spark.read.option("mergeSchema", "true").parquet(hit: _*)
-              case Some(applied) => antiJoinPositions(readWithPos(spark, leaf, hit), applied)
-            }
-            Some(aware.join(src.select(keys.map(col): _*), keys, "left_anti"))
-          }
-        val staged = survivors match {
+      Some(rewrite(
+        spark, fs, leaf, stem, st0, hit, cfg,
+        _ - matched + srcRows, s" - matched $matched + source $srcRows",
+        // a merge that REPLACED editions changed values without
+        // changing counts — a pure update (matched == srcRows) is
+        // count-preserving, and without this flag the walk's
+        // "count equality ⇒ row preservation" verification would net
+        // it to ZERO and every feed consumer would keep the stale
+        // editions (caught by MergeCommitSpec's pure-update case)
+        mutates = matched > 0,
+      ) { (rows, _) =>
+        rows match {
           case None =>
             // no hit files, but the columns contract must still hold
             // (a column-mismatched source sealing silently would make
@@ -1076,65 +1046,18 @@ object ManifestCommit {
               )
             }
             src
-          case Some(sv) =>
+          case Some(aware) =>
+            // survivors: hit rows (delete-aware) whose key has NO source
+            // edition — plain-equality anti join, so NULL-key target rows
+            // always survive; then the source appends whole
+            val sv = aware.join(src.select(keys.map(col): _*), keys, "left_anti")
             require(
               sv.columns.sorted.sameElements(src.columns.sorted),
               s"merge source columns ${src.columns.sorted.mkString(",")} != leaf columns ${sv.columns.sorted.mkString(",")}",
             )
             sv.unionByName(src)
         }
-        staged.write
-          .option("compression", "snappy")
-          .option("maxRecordsPerFile", cfg.maxRowsPerFile)
-          .mode("overwrite").parquet(dataDir)
-        val (outFiles, rowsStaged) = nonEmptyStaged(spark, fs, dataDir)
-        if (rowsStaged != rowsIn - matched + srcRows) {
-          fs.delete(new Path(dataDir), true)
-          return Some(LeafResult(
-            leaf, stem, success = false, rowsStaged, 0,
-            Some(s"validation failed: staged $rowsStaged rows != input $rowsIn - matched $matched + source $srcRows"),
-          ))
-        }
-        val outputsRel = outFiles.map(p => s".data-$runId/${p.getName}")
-        ManifestStats.writeSidecars(spark, fs, leaf, runId, outputsRel.zip(outFiles.map(_.toString)), cfg)
-        val deletesRel = writeFoldResiduals(spark, fs, leaf, runId, fold)
-        publish(
-          fs, leaf, stem, runId,
-          inputsRel = hitRel ++ fold.touchingRel, outputsRel = outputsRel,
-          rows = rowsStaged, retries = cfg.commitRetries,
-          deletesRel = deletesRel, drows = fold.residualRows,
-          knownDeletes = Some(st0.deletes.toSet),
-          // a merge that REPLACED editions changed values without
-          // changing counts — a pure update (matched == srcRows) is
-          // count-preserving, and without this flag the walk's
-          // "count equality ⇒ row preservation" verification would net
-          // it to ZERO and every feed consumer would keep the stale
-          // editions (caught by MergeCommitSpec's pure-update case)
-          mutates = matched > 0,
-        )
-        val undeleted =
-          if (cfg.retainSuperseded) Seq.empty
-          else {
-            val refStems =
-              if (fold.touchingRel.exists(isEqDeleteRel)) liveEqRefStems(spark, leaf)
-              else Set.empty[String]
-            (hit ++ fold.touchingRel.map(r => s"$leaf/$r"))
-              .filterNot(p => underEqStems(refStems, relativeTo(leaf, p)))
-              .filterNot { p =>
-                try fs.delete(new Path(p), false)
-                catch { case _: Throwable => false }
-              }
-          }
-        Some(LeafResult(
-          leaf, stem, success = true, rowsStaged, outFiles.size,
-          if (undeleted.isEmpty) None
-          else Some(s"committed; ${undeleted.size} superseded original(s) left as debris"),
-        ))
-      } catch {
-        case e: Throwable =>
-          rollback(spark, leaf, stem, runId, Some(dataDir))
-          Some(LeafResult(leaf, stem, success = false, 0L, 0, Some(e.toString)))
-      }
+      })
     } finally { src.unpersist(); () }
   }
 
@@ -1752,18 +1675,21 @@ object ManifestCommit {
     p.getFileSystem(spark.sparkContext.hadoopConfiguration).makeQualified(p).toString + "/"
   }
 
-  /** Read data `files` (all under `leaf`) with hidden row-identity
-    * columns: `_mor_rel` (leaf-relative source path) and `_mor_pos`
-    * (row ordinal in that file) — both resolved at the scan from the
-    * parquet `_metadata` struct, no UDF, codegen-friendly.
+  /** `df`, a parquet scan of files under `leaf`, with hidden
+    * row-identity columns: `_mor_rel` (leaf-relative source path) and
+    * `_mor_pos` (row ordinal in that file) — both resolved at the scan
+    * from the parquet `_metadata` struct, no UDF, codegen-friendly.
     */
-  private[compact] def readWithPos(spark: SparkSession, leaf: String, files: Seq[String]): DataFrame = {
+  private[compact] def withPos(spark: SparkSession, leaf: String, df: DataFrame): DataFrame = {
     import org.apache.spark.sql.functions.{col, lit}
     val pfx = qualifiedPrefix(spark, leaf)
-    spark.read.option("mergeSchema", "true").parquet(files: _*)
-      .withColumn("_mor_rel", col("_metadata.file_path").substr(lit(pfx.length + 1), lit(Int.MaxValue)))
+    df.withColumn("_mor_rel", col("_metadata.file_path").substr(lit(pfx.length + 1), lit(Int.MaxValue)))
       .withColumn("_mor_pos", col("_metadata.row_index"))
   }
+
+  /** Data `files` (all under `leaf`) read with [[withPos]]'s columns. */
+  private[compact] def readWithPos(spark: SparkSession, leaf: String, files: Seq[String]): DataFrame =
+    withPos(spark, leaf, spark.read.option("mergeSchema", "true").parquet(files: _*))
 
   /** The (file, pos) rows of the given delete sidecar files. */
   private[compact] def deletePositions(spark: SparkSession, deleteFiles: Seq[String]): DataFrame = {
@@ -1793,18 +1719,19 @@ object ManifestCommit {
     * then position sidecars anti-join on (file, pos). The sidecar side
     * is churn-bounded, so Spark's size estimate broadcasts it in the
     * common case; a retention backlog large enough to shuffle is
-    * exactly when a shuffle is correct.
+    * exactly when a shuffle is correct. `read` reads a subset of
+    * `files` with the identity columns.
     */
   private[compact] def awareWithPos(
       spark: SparkSession,
       leaf: String,
       files: Seq[String],
       deleteFiles: Seq[String],
-  ): DataFrame = {
-    if (deleteFiles.isEmpty) return readWithPos(spark, leaf, files)
+  )(read: Seq[String] => DataFrame): DataFrame = {
+    if (deleteFiles.isEmpty) return read(files)
     val (posRels, eqs) = splitSidecarRels(deleteFiles.map(relativeTo(leaf, _)))
     val base =
-      if (eqs.isEmpty) readWithPos(spark, leaf, files)
+      if (eqs.isEmpty) read(files)
       else {
         val scopes = eqs.map(e => eqScopeRels(spark, leaf, e).toSet)
         // byte sizes resolved LAZILY per sidecar actually applied to a
@@ -1817,7 +1744,7 @@ object ManifestCommit {
           .groupBy(f => scopes.zipWithIndex.collect { case (sc, i) if sc(relativeTo(leaf, f)) => i })
           .toSeq.sortBy(_._2.head)
         val parts = groups.map { case (sids, fls) =>
-          sids.foldLeft(readWithPos(spark, leaf, fls)) { (df, i) =>
+          sids.foldLeft(read(fls)) { (df, i) =>
             antiJoinKeysGuarded(df, readEqKeys(spark, leaf, eqs(i)), keyBytes(i))
           }
         }
@@ -1834,7 +1761,7 @@ object ManifestCommit {
       deleteFiles: Seq[String],
   ): DataFrame =
     if (deleteFiles.isEmpty) spark.read.option("mergeSchema", "true").parquet(files: _*)
-    else awareWithPos(spark, leaf, files, deleteFiles).drop("_mor_rel", "_mor_pos")
+    else awareWithPos(spark, leaf, files, deleteFiles)(readWithPos(spark, leaf, _)).drop("_mor_rel", "_mor_pos")
 
   /** Resolve a mixed sidecar list to ONE distinct (file, pos) frame —
     * the COUNT currency ([[ManifestStats.countLeaf]]'s correction).

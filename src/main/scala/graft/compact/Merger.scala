@@ -71,7 +71,8 @@ object Merger {
   }
 
   /** Stage the merged rows at `destDir` under the configured layout
-    * (shared by both commit modes). Bucketed layout must go through the
+    * (rename mode; the manifest commit stages through
+    * [[ManifestCommit]]'s own rewrite). Bucketed layout must go through the
     * DataFrameWriter bucketBy path — only it writes the bucket-id file
     * naming the bucketed read resolves — which requires saveAsTable, so
     * the write registers a throwaway EXTERNAL table (path = destDir;
@@ -93,7 +94,7 @@ object Merger {
       // which manifest leaves (live set = manifest subtraction) cannot
       // express — in manifest mode the bucketBy shuffle would be paid on
       // every commit with no reader ever able to use the layout
-      case Some(k) if cfg.commitMode == CommitMode.Rename && cfg.bucketCount > 0 && df.columns.contains(k) =>
+      case Some(k) if cfg.bucketCount > 0 && df.columns.contains(k) =>
         val tmpTable = s"graft_stage_$runId"
         spark.sql(s"DROP TABLE IF EXISTS `$tmpTable`")
         df.repartition(cfg.bucketCount, org.apache.spark.sql.functions.col(k))

@@ -30,8 +30,8 @@ import org.apache.spark.sql.functions._
   *  3. PUBLISH — all-zero report: stats/bloom sidecars are written
   *     beside the staged dir, then ONE sealed-manifest PUT with empty
   *     `inputs` appends the staged files to the live set
-  *     ([[ManifestCommit.publish]] — same commit point, OCC tripwire,
-  *     and head discipline as compaction).
+  *     ([[ManifestCommit.sealAndPublish]] — the same sidecar, commit
+  *     point, OCC tripwire and head discipline as compaction).
   *     Violations: the staged dir is MOVED under the quarantine leaf
   *     and sealed there with the same manifest machinery — the bad
   *     batch stays queryable for triage ([[ManifestCommit.readLeaf]] on
@@ -176,9 +176,10 @@ object WapCommit {
       )
     }
 
-    // AUDIT: one unioned lazy plan over the staged files; each check is
-    // a 1-row count. Collect size == number of checks.
-    val audited = spark.read.parquet(staged.map(_.toString): _*)
+    // AUDIT: one unioned lazy plan over the staged files, read from the
+    // probe above (no listing, no schema job); each check is a 1-row
+    // count. Collect size == number of checks.
+    val audited = KnownFiles.read(spark, probed, KnownFiles.sessionMergeSchema(spark))
     val report = WapReport(
       checks
         .map(ch =>
@@ -197,15 +198,11 @@ object WapCommit {
     val ordered = WapReport(checks.map(c => (c.name, byName(c.name))))
 
     if (ordered.passed) {
-      val outputsRel = staged.map(p => s".data-$runId/${p.getName}")
-      // Sidecars BEFORE the commit point, exactly like mergeAndCommit:
-      // a crash here strands debris, never a sidecar-less live file
-      // (sidecars are optional for readers anyway).
-      ManifestStats.writeSidecars(spark, fs, leaf, runId, outputsRel.zip(staged.map(_.toString)), cfg)
-      ManifestCommit.publish(
-        fs, leaf, stem = "wap", runId = runId,
-        inputsRel = Seq.empty, outputsRel = outputsRel,
-        rows = rowsStaged, retries = cfg.commitRetries,
+      // the same sidecar-then-publish tail as every rewrite: a crash
+      // before the commit point strands debris, never a sidecar-less
+      // live file (sidecars are optional for readers anyway)
+      ManifestCommit.sealAndPublish(
+        spark, fs, leaf, "wap", runId, Seq.empty, staged.map(p => s".data-$runId/${p.getName}"), rowsStaged, cfg,
       )
       WapCommitted(ManifestCommit.currentSeq(spark, leaf), rowsStaged, ordered)
     } else {

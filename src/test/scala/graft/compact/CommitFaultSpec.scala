@@ -382,20 +382,29 @@ class CommitFaultSpec extends AnyFunSuite with Matchers with SparkSpec with Befo
   }
 
   test("solo merge surfaces originals whose delete returned false") {
-    FaultFs.reset()
-    val plan = mkLeaf("rc")
-    FaultFs.failDeleteRe = Some(".*/x\\.parquet$")
-    val result = Merger.mergeAndCommit(spark, plan, cfg)
-    FaultFs.reset()
-    withClue(result) {
-      result.success shouldBe true
-      result.rowsWritten shouldBe 20L
-      result.error.get should include("not deleted")
-      result.error.get should include("x.parquet")
+    // (stem, rows the commit writes, the commit): the rename-mode merge,
+    // and a manifest-mode DELETE of id 3, which hits both files
+    val commits: Seq[(String, Long, LeafPlan => LeafResult)] = Seq(
+      ("rc", 20L, plan => Merger.mergeAndCommit(spark, plan, cfg)),
+      ("rd", 18L, plan => ManifestCommit.deleteWhere(
+        spark, plan.leaf, org.apache.spark.sql.functions.col("id") === 3L, mcfg, plan.stem).get),
+    )
+    commits.foreach { case (stem, rows, commit) =>
+      FaultFs.reset()
+      val plan = mkLeaf(stem)
+      FaultFs.failDeleteRe = Some(".*/x\\.parquet$")
+      val result = commit(plan)
+      FaultFs.reset()
+      withClue(result) {
+        result.success shouldBe true
+        result.rowsWritten shouldBe rows
+        result.error.get should include("not deleted")
+        result.error.get should include("x.parquet")
+      }
+      val leafDir = new File(new URI("file:" + plan.leaf.stripPrefix("faultfs:")))
+      val names = leafDir.listFiles().map(_.getName).filter(_.endsWith(".parquet")).toSet
+      names should contain("x.parquet") // the survivor is really there
+      names should not contain "y.parquet"
     }
-    val leafDir = new File(new URI("file:" + plan.leaf.stripPrefix("faultfs:")))
-    val names = leafDir.listFiles().map(_.getName).filter(_.endsWith(".parquet")).toSet
-    names should contain("x.parquet") // the survivor is really there
-    names should not contain "y.parquet"
   }
 }

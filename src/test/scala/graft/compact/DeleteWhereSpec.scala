@@ -94,6 +94,21 @@ class DeleteWhereSpec extends AnyFunSuite with Matchers with SparkSpec with Befo
     ManifestCommit.currentSeq(spark, leafPath) shouldBe head
   }
 
+  test("deleteWhere stages no file above the row cap") {
+    val leaf = new File(root, "rowcap"); leaf.mkdirs()
+    val leafPath = leaf.getAbsolutePath
+    writeFile(leaf, "a.parquet", 1L to 100L, "a") // a raw arrival of 100 rows
+    val capped = cfg.copy(maxRowsPerFile = 10L)
+    val r = ManifestCommit.deleteWhere(spark, leafPath, col("id") === 5L, capped)
+    withClue(r) { r.get.success shouldBe true }
+    val live = ManifestCommit.liveFiles(spark, leafPath)
+    val rows = live.map(f => spark.read.parquet(f).count())
+    withClue(live.zip(rows)) {
+      rows.sum shouldBe 99L
+      rows.foreach(_ should be <= 10L)
+    }
+  }
+
   test("SQL DELETE null semantics: a NULL-evaluating row survives") {
     val s = spark
     import s.implicits._

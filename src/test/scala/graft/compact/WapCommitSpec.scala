@@ -229,6 +229,15 @@ class WapCommitSpec extends AnyFunSuite with Matchers with SparkSpec with Before
     pruned shouldBe Seq.empty
   }
 
+  test("a multi-file stage is audited from its footer probe: no schema-inference job") {
+    val l = leaf("jobshape")
+    val (r, jobs) = JobLog.of(spark)(writeAuditPublish(spark, l, cleanBatch(20), battery, cfg))
+    r shouldBe a[WapCommitted]
+    ManifestCommit.liveFiles(spark, l).size should be > 1
+    // listing and schema inference are the jobs outside a SQL execution
+    withClue(jobs.mkString("\n")) { jobs.filterNot(_.sqlExecution) shouldBe empty }
+  }
+
   test("duplicate check names are rejected — a failing check cannot hide behind a same-named passing one") {
     val l = leaf("dupnames")
     val checks = Seq(
